@@ -4,9 +4,11 @@ Prints ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec, ...}, "sf": ...}.  The driver records this as
 BENCH_r{N}.json and grades against BASELINE.md (within 2x at the same SF).
 
-Each timed run forces full execution via a count over the materialized result
-(`df.toLocalIterator` would under-count lazy work; count() executes the whole
-plan; noop write would also work but count keeps the driver memory flat).
+Each timed run executes the query via ``count()``.  That is a lower bound,
+not the full plan: under ``count()`` Catalyst prunes output expressions and
+aggregate functions the count does not need, so some queries do much less
+work than when their output is consumed.  ``perfbench/`` writes every output
+to a ``noop`` sink instead, which materializes all of it.
 
 Protocol: per query, one untimed warmup run then the MEDIAN of 3 timed runs —
 the same steady-state convention as the reference's own measurement tool

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
-from clickhouseocp_spark.catalog import register_tables
+from clickhouseocp_spark.catalog import _session_key, local_frame, register_tables
 from clickhouseocp_spark.functions import clickhouse_names as _ch
 from clickhouseocp_spark.session import get_spark
 
@@ -98,6 +98,11 @@ def _split_assignments(text: str) -> list[str]:
     return [render(p) for p in _split_top(tokenize(text), ",") if p]
 
 
+#: Sessions whose CH-named UDFs are registered: temp functions live as long
+#: as the session, and registering about 20 pandas UDFs takes about 0.2 s.
+_UDF_SESSIONS: set[str] = set()
+
+
 class ChSparkEngine:
     """SQL + named-query engine over a fixture/data directory."""
 
@@ -112,7 +117,10 @@ class ChSparkEngine:
 
     def _register_udfs(self) -> None:
         """CH scalar names with no Spark builtin, exposed to SQL TEXT as
-        registered pandas UDFs (idempotent; session-scoped)."""
+        registered pandas UDFs (once per session)."""
+        key = _session_key(self.spark)
+        if key in _UDF_SESSIONS:
+            return
         from clickhouseocp_spark.functions.series_fft import register_series_udfs
         from clickhouseocp_spark.functions.text import register_ch_udfs
 
@@ -125,6 +133,7 @@ class ChSparkEngine:
 
         register_stl_udfs(self.spark)
         register_dist_udfs(self.spark)
+        _UDF_SESSIONS.add(key)
 
     def sql(
         self, query: str, dialect: str = "auto", params: dict | None = None
@@ -239,8 +248,8 @@ class ChSparkEngine:
         event_time, query_kind, query, query_duration_ms, read_rows,
         result_rows, memory_usage plus the engine-specific dialect tag."""
         rows = list(getattr(self, "_query_log", []))
-        return self.spark.createDataFrame(
-            rows,
+        return local_frame(
+            self.spark, rows,
             "query_id bigint, event_time string, query_kind string, "
             "query string, dialect string, query_duration_ms double, "
             "type string, event_date string, read_rows bigint, "
@@ -297,8 +306,8 @@ class ChSparkEngine:
         if getattr(self, "_system_views_done", False):
             # keep the system.settings view current (changed-flag semantics)
             self.system_settings().createOrReplaceTempView("system_settings")
-        return self.spark.createDataFrame(
-            [(name, value)], "setting string, value string"
+        return local_frame(
+            self.spark, [(name, value)], "setting string, value string"
         ).limit(0)
 
     def system_metrics(self) -> DataFrame:
@@ -325,8 +334,8 @@ class ChSparkEngine:
                 "session settings applied via SET",
             ),
         ]
-        return self.spark.createDataFrame(
-            rows, "metric string, value bigint, description string"
+        return local_frame(
+            self.spark, rows, "metric string, value bigint, description string"
         )
 
     def _sql_impl(self, query: str, dialect: str = "auto") -> DataFrame:
@@ -348,17 +357,19 @@ class ChSparkEngine:
         if head == "SHOW" and query.strip().upper().rstrip(";") == "SHOW TABLES":
             return self.system_tables()
         if head == "SHOW" and query.strip().upper().rstrip(";") == "SHOW DATABASES":
-            return self.spark.createDataFrame([("default",)], "name string")
+            return local_frame(self.spark, [("default",)], "name string")
         if head == "SHOW" and query.strip().upper().rstrip(";") == "SHOW PROCESSLIST":
             # session engine: no concurrent query daemon → always empty,
             # with the CH column surface so ops scripts parse the result
-            return self.spark.createDataFrame(
-                [], "query_id string, user string, query string, elapsed double"
+            return local_frame(
+                self.spark,
+                [],
+                "query_id string, user string, query string, elapsed double",
             )
         if head == "EXISTS":
             t = query.strip().rstrip(";").split()[-1].lower()
-            return self.spark.createDataFrame(
-                [(1 if t in self.tables else 0,)], "result int"
+            return local_frame(
+                self.spark, [(1 if t in self.tables else 0,)], "result int"
             )
         if head == "SHOW" and query.strip().upper().rstrip(";").startswith(
             "SHOW CREATE TABLE"
@@ -379,8 +390,8 @@ class ChSparkEngine:
             if mode == "ESTIMATE":
                 return self.explain_estimate(rest)
             plan = self.explain(rest, dialect=dialect, mode=mode)
-            return self.spark.createDataFrame(
-                [(line,) for line in plan.splitlines()], "plan string"
+            return local_frame(
+                self.spark, [(line,) for line in plan.splitlines()], "plan string"
             )
         if any(
             t in query.lower()
@@ -779,8 +790,8 @@ class ChSparkEngine:
                         ) else "string",
                     )
                     rows.append((f.name, i, clr_names[kt], kt))
-                return self.spark.createDataFrame(
-                    rows,
+                return local_frame(
+                    self.spark, rows,
                     "ColumnName string, ColumnOrdinal int, "
                     "DataType string, ColumnType string",
                 )
@@ -1081,10 +1092,10 @@ class ChSparkEngine:
                         raise ChSqlError(f"malformed column definition: {coldef!r}")
                     fields.append((parts[0], self._spark_type(parts[1].strip())))
                 schema = ", ".join(f"{n} {ty}" for n, ty in fields)
-                empty = self.spark.createDataFrame([], schema)
+                empty = local_frame(self.spark, [], schema)
                 self.tables[t] = empty
                 empty.createOrReplaceTempView(t)
-                return self.spark.createDataFrame([(t,)], "created string").limit(0)
+                return local_frame(self.spark, [(t,)], "created string").limit(0)
         m = _re.match(
             r"(?is)^CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?(\w+)\s*"
             r"(?:ENGINE\s*=\s*\w+(?:\(\s*\))?\s*)?"
@@ -1238,8 +1249,8 @@ class ChSparkEngine:
             # lineage (policies and mutations included, like CH's data dump)
             t, path = m.group(1).lower(), m.group(2)
             self._table(t).write.mode("errorifexists").parquet(path)
-            return self.spark.createDataFrame(
-                [(t, path, "BACKUP_CREATED")],
+            return local_frame(
+                self.spark, [(t, path, "BACKUP_CREATED")],
                 "table string, path string, status string",
             )
         m = _re.match(
@@ -1800,8 +1811,8 @@ class ChSparkEngine:
         self.system_build_options().createOrReplaceTempView("system_build_options")
         self.system_parts().createOrReplaceTempView("system_parts")
         # system.one: the 1-row constant table CH uses for FROM-less probes
-        self.spark.createDataFrame(
-            [(0,)], "dummy tinyint"
+        local_frame(
+            self.spark, [(0,)], "dummy tinyint"
         ).createOrReplaceTempView("system_one")
         self.system_settings().createOrReplaceTempView("system_settings")
         # information_schema compat layer (CH ships it for BI tools):
@@ -1818,8 +1829,10 @@ class ChSparkEngine:
             "position AS ordinal_position, type AS data_type "
             "FROM system_columns"
         ).createOrReplaceTempView("information_schema_columns")
-        self.spark.createDataFrame(
-            [("default", "default")], "catalog_name string, schema_name string"
+        local_frame(
+            self.spark,
+            [("default", "default")],
+            "catalog_name string, schema_name string",
         ).createOrReplaceTempView("information_schema_schemata")
         self._system_views_done = True
 
@@ -1844,8 +1857,8 @@ class ChSparkEngine:
         rows = [(k, str(v), 1) for k, v in sorted(changed.items())] + [
             (k, str(v), 0) for k, v in pinned if k not in changed
         ]
-        return self.spark.createDataFrame(
-            rows, "name string, value string, changed int"
+        return local_frame(
+            self.spark, rows, "name string, value string, changed int"
         )
 
     def system_build_options(self) -> DataFrame:
@@ -1874,7 +1887,7 @@ class ChSparkEngine:
                 "spark.sql.parquet.filterPushdown",
             )
         ]
-        return self.spark.createDataFrame(confs, "name string, value string")
+        return local_frame(self.spark, confs, "name string, value string")
 
     def _spark_type(self, ch: str) -> str:
         """CH column type name → Spark SQL type (inverse of _CH_TYPE_NAMES,
@@ -1948,7 +1961,7 @@ class ChSparkEngine:
             f"CREATE TABLE {name}\n(\n    {cols}\n)\n"
             f"ENGINE = MergeTree{partition}\nORDER BY tuple()"
         )
-        return self.spark.createDataFrame([(ddl,)], "statement string")
+        return local_frame(self.spark, [(ddl,)], "statement string")
 
     def system_parts(self) -> DataFrame:
         """``system.parts`` analog over CTAS-materialized MergeTree-layout
@@ -2002,8 +2015,8 @@ class ChSparkEngine:
                     (table, "", f"{table}.parquet", meta.num_rows,
                      os.path.getsize(fixture), meta.num_row_groups, 1)
                 )
-        return self.spark.createDataFrame(
-            rows,
+        return local_frame(
+            self.spark, rows,
             "table string, partition string, name string, rows bigint, "
             "bytes_on_disk bigint, row_groups int, active int",
         )
@@ -2014,7 +2027,9 @@ class ChSparkEngine:
             (t.name, t.tableType, ",".join(t.namespace or []))
             for t in self.spark.catalog.listTables()
         ]
-        return self.spark.createDataFrame(rows, "name string, type string, namespace string")
+        return local_frame(
+            self.spark, rows, "name string, type string, namespace string"
+        )
 
     def system_columns(self) -> DataFrame:
         """`system.columns` analog: every registered fixture table's columns
@@ -2027,8 +2042,8 @@ class ChSparkEngine:
             for i, f in enumerate(df.schema.fields)
         ]
         # CH system.columns column names: table, name, type, position
-        return self.spark.createDataFrame(
-            rows, "table string, name string, type string, position int"
+        return local_frame(
+            self.spark, rows, "table string, name string, type string, position int"
         )
 
     def system_functions(self) -> DataFrame:
@@ -2040,7 +2055,7 @@ class ChSparkEngine:
             r[0] for r in self.spark.sql("SHOW FUNCTIONS").collect()
         }
         rows = [(n, n.lower() in native) for n in names]
-        return self.spark.createDataFrame(rows, "name string, spark_builtin boolean")
+        return local_frame(self.spark, rows, "name string, spark_builtin boolean")
 
     def explain(self, name_or_sql: str, dialect: str = "auto", mode: str = "PIPELINE") -> str:
         """EXPLAIN statement family (CH ships EXPLAIN AST / SYNTAX / PLAN /
@@ -2168,10 +2183,11 @@ class ChSparkEngine:
                 if stats is not None:
                     stats["written_rows"] = n
                 return f"{n} rows written to {path}."
-            text = render(df, fmt, max_rows)
+            st: dict = {}
+            text = render(df, fmt, max_rows, stats=st)
             with open(path, "w") as fh:
                 fh.write(text)
-            n = df.count()
+            n = st["result_rows"]  # the rows written, capped at max_rows
             if stats is not None:
                 stats["written_rows"] = n
             return f"{n} rows written to {path}."

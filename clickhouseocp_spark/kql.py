@@ -3324,13 +3324,17 @@ def _prune_scan_source(
         e for _n, _p, a, _o in steps for e in a.values()
     ]
     used = set(re.findall(r"__r\.__row\.(\w+)", " ".join(lowered)))
-    needed = (
-        (set(downstream_cols) - ({match_id} if match_id else set()) - set(var_names))
-        | set(keys)
-        | order_idents
-        | used
-    )
-    return f"(SELECT {', '.join(sorted(needed))} FROM {sub}) __scp"
+    # Spark resolves names case-insensitively: drop the scan-created names
+    # in any case, and keep one spelling per column (a repeated column
+    # would make the outer references ambiguous)
+    created = {n.lower() for n in [match_id, *var_names] if n}
+    needed: dict[str, str] = {}
+    for c in sorted(
+        {c for c in downstream_cols if c.lower() not in created}
+        | set(keys) | order_idents | used
+    ):
+        needed.setdefault(c.lower(), c)
+    return f"(SELECT {', '.join(sorted(needed.values()))} FROM {sub}) __scp"
 
 
 def _scan(

@@ -71,6 +71,8 @@ def dsir_weights(
     over the single tokenization's pre-agg, identical integers to
     tokenizing the subset again, and the second corpus scan+split+explode
     disappears."""
+    if target is None and target_flag is None:
+        raise ValueError("target or target_flag required")
     # per-(doc,bucket) PRE-AGG feeds BOTH the model fit and the scoring
     # join (the bigram-LM shape, SCALE.md): the corpus tokenizes ONCE —
     # without it the explode branch re-executes for each consumer — and

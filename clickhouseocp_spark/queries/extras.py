@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from clickhouseocp_spark.catalog import load_table
+from clickhouseocp_spark.catalog import load_table, local_frame
 from clickhouseocp_spark.functions import clickhouse_names as ch
 from clickhouseocp_spark.operators.groupwise import top_k
 from clickhouseocp_spark.queries import register
@@ -673,8 +673,8 @@ def system_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
         for t in TABLES
         for i, f in enumerate(load_table(spark, sf_dir, t).schema.fields)
     ]
-    return spark.createDataFrame(
-        rows, "tbl string, col string, position int, dtype string"
+    return local_frame(
+        spark, rows, "tbl string, col string, position int, dtype string"
     )
 
 

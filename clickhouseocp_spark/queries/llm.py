@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from clickhouseocp_spark.catalog import load_table
+from clickhouseocp_spark.catalog import load_table, local_frame
 from clickhouseocp_spark.functions.text import (
     LANG_MARKERS,
     TOKEN_RE,
@@ -2237,8 +2237,8 @@ def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     recon_ok = bool(
         abs(stats.avg_resid - tail_mass) <= 1e-6 * max(model.total_variance, 1e-30)
     )
-    return spark.createDataFrame(
-        [(int(stats.n_vectors), k, var_order_ok, ortho_ok, recon_ok)],
+    return local_frame(
+        spark, [(int(stats.n_vectors), k, var_order_ok, ortho_ok, recon_ok)],
         "n_vectors bigint, k int, var_order_ok boolean, ortho_ok boolean, "
         "recon_ok boolean",
     )
@@ -2400,8 +2400,8 @@ def minhash_lsh_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 100 TB deployment reads this table to pick banding for its target
     similarity, no sweep required."""
     grid = (
-        spark.createDataFrame([(4,), (8,), (16,), (32,)], "b int")
-        .crossJoin(spark.createDataFrame([(2,), (4,), (8,)], "r int"))
+        local_frame(spark, [(4,), (8,), (16,), (32,)], "b int")
+        .crossJoin(local_frame(spark, [(2,), (4,), (8,)], "r int"))
     )
     b, r = F.col("b").cast("double"), F.col("r").cast("double")
 

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from clickhouseocp_spark.catalog import load_table
+from clickhouseocp_spark.catalog import load_table, local_frame
 from clickhouseocp_spark.functions.text import whitespace_tokens, word_shingles
 from clickhouseocp_spark.operators.similarity import cosine_topk, semantic_dedup
 from clickhouseocp_spark.queries import register
@@ -568,8 +568,8 @@ def bm25_retrieve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from clickhouseocp_spark.operators.ranking import bm25_topk
 
     docs = load_table(spark, sf_dir, "documents")
-    queries = spark.createDataFrame(
-        _BM25_QUERIES, "query_id int, query_text string"
+    queries = local_frame(
+        spark, _BM25_QUERIES, "query_id int, query_text string"
     )
     return bm25_topk(docs, queries, k=5)
 
@@ -630,8 +630,8 @@ def quality_classifier_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     toks = tokenize_terms(docs, "text")
-    weights = spark.createDataFrame(
-        list(_QUALITY_WEIGHTS.items()), "term string, w double"
+    weights = local_frame(
+        spark, list(_QUALITY_WEIGHTS.items()), "term string, w double"
     )
     feats = (
         toks.join(F.broadcast(weights), "term", "left")

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from clickhouseocp_spark.catalog import load_table
+from clickhouseocp_spark.catalog import load_table, local_frame
 from clickhouseocp_spark.queries import register
 from clickhouseocp_spark.queries.stats_q import _dsum, _sql_dsum
 
@@ -613,8 +613,8 @@ def stochastic_linear_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).first()
         w = round(w - _GD_LR * 2 * g["gw"] / g["n"], 8)
         b = round(b - _GD_LR * 2 * g["gb"] / g["n"], 8)
-    return spark.createDataFrame(
-        [(round(w, 6), round(b, 6), _GD_ITERS)], "w double, b double, iters int"
+    return local_frame(
+        spark, [(round(w, 6), round(b, 6), _GD_ITERS)], "w double, b double, iters int"
     )
 
 

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from clickhouseocp_spark.catalog import load_table
+from clickhouseocp_spark.catalog import load_table, local_frame
 from clickhouseocp_spark.functions import clickhouse_names as ch
 from clickhouseocp_spark.queries import register
 
@@ -114,8 +114,8 @@ def soundex_base58_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass-through and leading-duplicate rules) and the canonical base58 test
     string, plus a decode∘encode == identity contract computed in-query.
     The sf_dir is unused by design — codecs are data-independent."""
-    df = spark.createDataFrame(
-        [(n,) for n, _ in _SOUNDEX_PINS] + [(_B58_PIN_IN,)], "name string"
+    df = local_frame(
+        spark, [(n,) for n, _ in _SOUNDEX_PINS] + [(_B58_PIN_IN,)], "name string"
     )
     enc = ch.base58Encode(F.col("name"))
     return (

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from clickhouseocp_spark.catalog import load_table
+from clickhouseocp_spark.catalog import load_table, local_frame
 from clickhouseocp_spark.functions import clickhouse_names as ch
 from clickhouseocp_spark.queries import register
 
@@ -593,8 +593,8 @@ def text_stem_porter(spark: SparkSession, sf_dir: str) -> DataFrame:
     this implementation."""
     from clickhouseocp_spark.functions.text import stem
 
-    words = spark.createDataFrame(
-        [(w,) for w, _s in _PORTER_VECS], "word string"
+    words = local_frame(
+        spark, [(w,) for w, _s in _PORTER_VECS], "word string"
     )
     return words.select("word", stem("word").alias("stemmed"))
 
@@ -812,8 +812,8 @@ def codec_known_answers(spark: SparkSession, sf_dir: str) -> DataFrame:
     independently cross-checks stdlib zlib.crc32, and crc32('123456789') =
     0xCBF43926, the polynomial's published check value).  A hash match
     certifies the codecs against their specifications."""
-    words = spark.createDataFrame(
-        [("f",), ("fo",), ("foo",), ("foob",), ("fooba",), ("foobar",)],
+    words = local_frame(
+        spark, [("f",), ("fo",), ("foo",), ("foob",), ("fooba",), ("foobar",)],
         "plain string",
     )
     return words.select(

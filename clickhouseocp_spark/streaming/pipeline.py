@@ -19,12 +19,13 @@ ClickHouse upstream uses for its stateless streaming tests.
 
 from __future__ import annotations
 
+import shutil
 import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from clickhouseocp_spark.catalog import load_table
+from clickhouseocp_spark.catalog import parquet_schema
 
 
 _STREAM_DIRS: dict[str, str] = {}
@@ -49,7 +50,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = os.path.join(sf_dir, "events.parquet")
-    raw_schema = spark.read.parquet(path).schema
+    raw_schema = parquet_schema(spark, path)[0]
     stream = spark.readStream.schema(raw_schema).parquet(_staged_dir(path))
     ts_type = {f.name: f.dataType.simpleString() for f in raw_schema.fields}.get("ts")
     if ts_type == "bigint":
@@ -61,22 +62,36 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream
 
 
+def _drain(writer) -> None:
+    """Run a streaming write with a one-shot availableNow trigger until it
+    has drained its bounded input.  The checkpoint lives in a temp dir that
+    is removed once the query has stopped, whether it finished or failed."""
+    ckpt = tempfile.mkdtemp(prefix="ckpt_")
+    try:
+        q = (
+            writer.trigger(availableNow=True)
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        try:
+            q.awaitTermination()
+        finally:
+            q.stop()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+
+
 def run_available_now(stream_df: DataFrame, output_mode: str = "complete") -> DataFrame:
     """Execute a bounded streaming query to a memory sink and return the
     result table (one-shot availableNow trigger — drains everything, then
     stops; the pattern for batch-checking streaming semantics)."""
     name = f"mv_{uuid.uuid4().hex[:12]}"
-    q = (
+    _drain(
         stream_df.writeStream.format("memory")
         .queryName(name)
         .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .start()
     )
-    q.awaitTermination()
-    spark = stream_df.sparkSession
-    return spark.table(name)
+    return stream_df.sparkSession.table(name)
 
 
 def materialized_view(
@@ -326,7 +341,6 @@ def foreach_batch_upsert(
     against a partitioned table with dynamic partition overwrite, merging
     only the partitions the batch touches.  Returns ``target_dir``."""
     import os
-    import shutil
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -355,13 +369,7 @@ def foreach_batch_upsert(
             shutil.rmtree(target_dir)
         os.replace(tmp, target_dir)
 
-    q = (
-        stream.writeStream.foreachBatch(merge)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream.writeStream.foreachBatch(merge))
     return target_dir
 
 
@@ -385,7 +393,6 @@ def foreach_batch_sketch_rollup(
     state table is |keys| × occupied-buckets rows regardless of stream
     volume, and the read-time estimate never rescans events."""
     import os
-    import shutil
 
     from clickhouseocp_spark.operators.sketches import (
         quantile_dd_merge,
@@ -406,13 +413,7 @@ def foreach_batch_sketch_rollup(
             shutil.rmtree(target_dir)
         os.replace(tmp, target_dir)
 
-    q = (
-        stream.writeStream.foreachBatch(merge)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream.writeStream.foreachBatch(merge))
     return target_dir
 
 
@@ -422,7 +423,7 @@ def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     path = os.path.join(sf_dir, "documents.parquet")
-    schema = spark.read.parquet(path).schema
+    schema = parquet_schema(spark, path)[0]
     return spark.readStream.schema(schema).parquet(_staged_dir(path))
 
 
@@ -446,7 +447,6 @@ def foreach_batch_postings_rollup(
     compaction — here the bounded fixture uses the simpler
     union-distinct-replace."""
     import os
-    import shutil
 
     from clickhouseocp_spark.operators.fulltext import build_fulltext_index
 
@@ -464,13 +464,7 @@ def foreach_batch_postings_rollup(
             shutil.rmtree(target_dir)
         os.replace(tmp, target_dir)
 
-    q = (
-        stream.writeStream.foreachBatch(merge)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream.writeStream.foreachBatch(merge))
     return target_dir
 
 

@@ -808,6 +808,21 @@ def test_into_outfile_writes_and_reports(spark, sf_dir, tmp_path):
     assert out2.read_text().lstrip().startswith("{")
 
 
+def test_into_outfile_reports_rows_written_under_max_rows(spark, sf_dir, tmp_path):
+    """A text OUTFILE capped by ``max_rows`` reports the rows it wrote, not
+    the uncapped result size."""
+    from clickhouseocp_spark.engine import ChSparkEngine
+
+    eng = ChSparkEngine(sf_dir, spark=spark)
+    out = tmp_path / "keys.tsv"
+    msg = eng.run(
+        f"SELECT o_orderkey FROM orders ORDER BY o_orderkey INTO OUTFILE '{out}'",
+        max_rows=3,
+    )
+    assert msg == f"3 rows written to {out}."
+    assert len(out.read_text().splitlines()) == 3
+
+
 def test_refreshable_materialized_view(spark, sf_dir, tmp_path):
     """CREATE MATERIALIZED VIEW ... REFRESH EVERY n unit AS SELECT stores the
     definition, materializes immediately, and SYSTEM REFRESH VIEW recomputes

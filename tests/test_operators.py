@@ -1423,6 +1423,18 @@ def test_dsir_prefers_target_like_docs(spark):
     assert picked == {r.doc_id for r in dsir_select(raw, target, k=30).collect()}
 
 
+def test_dsir_without_target_raises(spark):
+    import pytest
+
+    from clickhouseocp_spark.operators.dsir import dsir_select, dsir_weights
+
+    raw = spark.createDataFrame([(1, "alpha beta")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="target or target_flag required"):
+        dsir_weights(raw, None)
+    with pytest.raises(ValueError, match="target or target_flag required"):
+        dsir_select(raw, None, k=1)
+
+
 def test_dsir_target_flag_equals_two_frame_fit(spark):
     """r16: when the target is a filtered subset of raw, the target_flag
     path (single tokenization, flag-conditional fit counts) must reproduce

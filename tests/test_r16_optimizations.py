@@ -225,6 +225,35 @@ def test_kql_scan_source_pruning_sql_shape():
     )
 
 
+def test_kql_scan_source_pruning_is_case_insensitive(spark, sf_dir):
+    """Spark resolves names case-insensitively, so the pruned source must
+    too: ``M`` is the scan's match id ``m``, and ``Ts``/``ts`` are one
+    column."""
+    from collections import Counter
+
+    from clickhouseocp_spark.engine import ChSparkEngine
+
+    eng = ChSparkEngine(sf_dir, spark)
+    scan = (
+        "| scan with_match_id=m with (step s1: event_type == 'signup'; "
+        "step s2: event_type == 'click')"
+    )
+    ref = eng.sql(
+        f"events | sort by ts asc, event_id asc {scan} | project ts, m",
+        dialect="kusto",
+    ).collect()
+    got = eng.sql(
+        f"events | sort by ts asc, event_id asc {scan} | project ts, M",
+        dialect="kusto",
+    ).collect()
+    assert ref and Counter(map(tuple, got)) == Counter(map(tuple, ref))
+    got = eng.sql(
+        f"events | sort by Ts asc, event_id asc {scan} | project ts",
+        dialect="kusto",
+    ).collect()
+    assert Counter(r[0] for r in got) == Counter(r[0] for r in ref)
+
+
 def test_kql_scan_registry_queries_prune_payload_columns(spark, sf_dir):
     """The benched scan machines must not carry events.value/props through
     the exchange, the per-key sort, the row arrays and the fold: the
