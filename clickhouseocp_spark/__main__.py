@@ -6,7 +6,8 @@ Modes:
 
 - ``-q/--query SQL`` (repeatable): execute each statement in order against
   the fixture tables and print the rendered result to stdout — trailing
-  ``FORMAT X`` chooses the rendering exactly like clickhouse-local.
+  ``FORMAT X`` chooses the rendering exactly like clickhouse-local; binary
+  formats (Native, RowBinary, Arrow, Parquet, …) write their raw bytes.
 - ``--serve``: start the HTTP analog in the foreground (port 8123 default;
   ``--port 0`` picks an ephemeral port and prints it).
 
@@ -58,7 +59,10 @@ def main(argv: list[str] | None = None) -> int:
         return 0
     for q in args.query:
         out = eng.run(q, dialect=args.dialect, max_rows=args.max_rows)
-        if out:
+        if isinstance(out, bytes):  # a binary FORMAT: raw bytes, as-is
+            sys.stdout.flush()
+            sys.stdout.buffer.write(out)
+        elif out:
             sys.stdout.write(out if out.endswith("\n") else out + "\n")
     return 0
 

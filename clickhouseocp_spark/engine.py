@@ -40,8 +40,7 @@ def detect_trailing_format(query: str) -> str | None:
 
 def strip_trailing_format(query: str) -> str:
     """The statement without its trailing ``FORMAT <name>`` clause (no-op
-    when absent / INSERT) — for callers that render out-of-band, e.g. the
-    HTTP layer's RowBinary path."""
+    when absent / INSERT) — for callers that render out-of-band."""
     import re as _re
 
     if detect_trailing_format(query) is None:
@@ -2124,25 +2123,28 @@ class ChSparkEngine:
         dialect: str = "clickhouse",
         max_rows: int = 10_000,
         stats: dict | None = None,
-    ) -> str:
+        default_format: str | None = None,
+    ) -> str | bytes:
         """``clickhouse-local -q`` parity: execute CH SQL text and return the
-        result rendered in its trailing ``FORMAT <name>`` clause (default
-        TabSeparated) — the stdout surface of the reference image
-        (Dockefile-ubuntu:52).  Driver-side and row-capped by design: bulk
-        exports go through sources/writers.py sinks, not a terminal format.
-        ``stats`` (optional out-param) receives ``result_rows`` /
-        ``written_rows`` for the HTTP summary headers."""
+        result rendered in its trailing ``FORMAT <name>`` clause, else in
+        ``default_format`` (default TabSeparated) — the stdout surface of the
+        reference image (Dockefile-ubuntu:52).  Text formats return ``str``,
+        binary ones (``formats.BINARY``) ``bytes``.  Driver-side and
+        row-capped by design: bulk exports go through sources/writers.py
+        sinks, not a terminal format.  ``stats`` (optional out-param)
+        receives ``result_rows`` / ``written_rows`` for the HTTP summary
+        headers."""
         import re as _re
 
         from clickhouseocp_spark.formats import render
 
         head = query.lstrip().split(None, 1)[0].upper() if query.strip() else ""
         m = detect_trailing_format(query)
-        fmt = m or "TabSeparated"
+        fmt = m or default_format or "TabSeparated"
         # SELECT ... INTO OUTFILE 'path' [FORMAT x]: clickhouse-local writes
-        # the rendered result to a driver-local file (CSV default per CH when
-        # the extension is .csv; TabSeparated otherwise) and reports the row
-        # count on stdout.  Driver-side by design — bulk exports go through
+        # the rendered result to a driver-local file (format from the
+        # extension when no FORMAT is given) and reports the row count on
+        # stdout.  Driver-side by design — bulk exports go through
         # sources/writers.py; this is the interactive-tool surface.
         mo = _re.search(
             r"\bINTO\s+OUTFILE\s+'([^']+)'", query, _re.IGNORECASE
@@ -2155,231 +2157,103 @@ class ChSparkEngine:
                     fmt = "Parquet"
                 elif path.endswith(".csv"):
                     fmt = "CSVWithNames"
-                else:
-                    fmt = "TabSeparated"
             df = self.sql(query, dialect=dialect)
             # binary columnar formats go through the DISTRIBUTED writer (no
-            # driver materialization, unlike the text renderings below) —
-            # clickhouse-local supports FORMAT Parquet/ORC/Arrow the same way
+            # driver materialization, unlike the renderings below) —
+            # clickhouse-local supports FORMAT Parquet/ORC/Arrow the same
+            # way; an Observation counts the rows inside the write's own job
             binfmt = {"parquet": "parquet", "orc": "orc", "arrow": "parquet"}
             if fmt.lower() in binfmt:
-                df.write.mode("errorifexists").format(
-                    binfmt[fmt.lower()]
-                ).save(path)
-                n = df.count()
-                if stats is not None:
-                    stats["written_rows"] = n
-                return f"{n} rows written to {path}."
-            if fmt.lower() == "native":
-                # CH block file (clickhouse-local interchange) — driver-side
-                # single block, row-capped like the text renders
-                from clickhouseocp_spark.formats import render_native
+                from pyspark.sql import Observation
+                from pyspark.sql import functions as F
 
+                obs = Observation()
+                df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+                    "errorifexists"
+                ).format(binfmt[fmt.lower()]).save(path)
+                n = obs.get["rows"]
+            else:
                 st: dict = {}
-                data = render_native(df, max_rows=max_rows, stats=st)
-                with open(path, "wb") as fh:
-                    fh.write(data)
-                n = st.get("result_rows", 0)
-                if stats is not None:
-                    stats["written_rows"] = n
-                return f"{n} rows written to {path}."
-            st: dict = {}
-            text = render(df, fmt, max_rows, stats=st)
-            with open(path, "w") as fh:
-                fh.write(text)
-            n = st["result_rows"]  # the rows written, capped at max_rows
+                out = render(df, fmt, max_rows, stats=st)
+                with open(path, "wb" if isinstance(out, bytes) else "w") as fh:
+                    fh.write(out)
+                n = st["result_rows"]  # the rows written, capped at max_rows
             if stats is not None:
                 stats["written_rows"] = n
             return f"{n} rows written to {path}."
         df = self.sql(query, dialect=dialect)
         return render(df, fmt, max_rows, stats=stats)
 
-
-    def insert_rowbinary(
+    def insert_binary(
         self, statement: str, data: bytes, stats: dict | None = None
     ) -> DataFrame:
-        """``INSERT INTO t [(cols)] FORMAT RowBinary`` with a binary data
-        body — the bulk-ingest shape CH drivers send over HTTP.  The body
-        decodes against the TARGET table's schema (plain RowBinary carries
-        no header; WithNamesAndTypes bodies carry their own and are
-        validated against it).  ``stats`` (optional out-param) receives
-        ``written_rows`` for the HTTP summary headers."""
+        """``INSERT INTO t [(cols)] FORMAT <name>`` with a binary data body,
+        for any ``<name>`` in ``formats.BINARY`` — the bulk-ingest shape CH
+        drivers send over HTTP.  Formats with a header name their columns,
+        which must exist in the target; plain RowBinary has none and decodes
+        against the target's types for the listed columns (all by default).
+        Absent columns default to NULL; rows append by union.  ``stats``
+        (optional out-param) receives ``written_rows`` for the HTTP summary
+        headers."""
         import re as _re
 
+        from pyspark.sql import functions as F
+        from pyspark.sql.types import StructType
+
         from clickhouseocp_spark.chsql import ChSqlError
-        from clickhouseocp_spark.formats import _rb_spark_to_ch, parse_rowbinary
+        from clickhouseocp_spark.formats import (
+            BINARY,
+            _rb_spark_to_ch,
+            canonical,
+            parse_rowbinary,
+        )
 
         m = _re.match(
             r"(?is)^INSERT\s+INTO\s+(\w+)\s*(?:\(([\w\s,]+)\)\s*)?"
-            r"FORMAT\s+(RowBinary|RowBinaryWithNamesAndTypes)\s*$",
+            r"FORMAT\s+(\w+)\s*$",
             statement.strip(),
         )
-        if not m:
+        fmt = canonical(m.group(3)) if m else None
+        if fmt not in BINARY:
             raise ChSqlError(
-                f"not an INSERT ... FORMAT RowBinary statement: {statement!r}"
+                f"not an INSERT ... FORMAT <binary format> statement: "
+                f"{statement!r}"
             )
         t = m.group(1).lower()
         target = self._base_table(t)
-        cols = (
-            [c.strip() for c in m.group(2).split(",")]
-            if m.group(2)
-            else list(target.columns)
-        )
         fields = {f.name: f for f in target.schema.fields}
-        if m.group(3).lower().endswith("withnamesandtypes"):
-            names, _types, rows = parse_rowbinary(data)
-            unknown = [c for c in names if c not in fields]
-            if unknown:
-                raise ChSqlError(
-                    f"RowBinary header names {unknown} not in table {t!r}"
-                )
-            cols = names
+        parse = BINARY[fmt][1]
+        if parse is not None:
+            names, rows = parse(data)
+        elif m.group(2):
+            names = [c.strip() for c in m.group(2).split(",")]
         else:
-            types = [
-                _rb_spark_to_ch(fields[c].dataType.simpleString(),
-                                fields[c].nullable)
-                for c in cols
-            ]
-            rows = parse_rowbinary(data, types)
-        from pyspark.sql.types import StructType
-
-        if stats is not None:
-            stats["written_rows"] = len(rows)
-        schema = StructType([fields[c] for c in cols])
-        incoming = self.spark.createDataFrame(rows, schema)
-        dt = dict(target.dtypes)
-        for c in target.columns:
-            if c not in cols:
-                incoming = incoming.withColumn(c, F.lit(None).cast(dt[c]))
-        return self._set_lineage(
-            t, target.unionByName(incoming.select(*target.columns))
-        )
-
-    def insert_native(
-        self, statement: str, data: bytes, stats: dict | None = None
-    ) -> DataFrame:
-        """``INSERT INTO t [(cols)] FORMAT Native`` with a binary
-        column-major block body (the most efficient CH ingest format).
-        Block column names validate against the target table; missing
-        columns default to NULL like the RowBinary path."""
-        import re as _re
-
-        from clickhouseocp_spark.chsql import ChSqlError
-        from clickhouseocp_spark.formats import parse_native
-
-        m = _re.match(
-            r"(?is)^INSERT\s+INTO\s+(\w+)\s*(?:\(([\w\s,]+)\)\s*)?"
-            r"FORMAT\s+Native\s*$",
-            statement.strip(),
-        )
-        if not m:
-            raise ChSqlError(
-                f"not an INSERT ... FORMAT Native statement: {statement!r}"
-            )
-        t = m.group(1).lower()
-        target = self._base_table(t)
-        fields = {f.name: f for f in target.schema.fields}
-        names, _types, rows = parse_native(data)
+            names = list(target.columns)
         unknown = [c for c in names if c not in fields]
         if unknown:
-            raise ChSqlError(
-                f"Native block column names {unknown} not in table {t!r}"
+            raise ChSqlError(f"{fmt} column names {unknown} not in table {t!r}")
+        if parse is None:  # no header: decode against the target's types
+            rows = parse_rowbinary(
+                data,
+                [
+                    _rb_spark_to_ch(
+                        fields[c].dataType.simpleString(), fields[c].nullable
+                    )
+                    for c in names
+                ],
             )
         if stats is not None:
             stats["written_rows"] = len(rows)
-        from pyspark.sql.types import StructType
-
-        schema = StructType([fields[c] for c in names])
-        incoming = self.spark.createDataFrame(rows, schema)
-        dt = dict(target.dtypes)
-        for c in target.columns:
-            if c not in names:
-                incoming = incoming.withColumn(c, F.lit(None).cast(dt[c]))
-        return self._set_lineage(
-            t, target.unionByName(incoming.select(*target.columns))
+        incoming = self.spark.createDataFrame(
+            rows, StructType([fields[c] for c in names])
         )
-
-    def insert_arrow(
-        self, statement: str, data: bytes, stats: dict | None = None
-    ) -> DataFrame:
-        """``INSERT INTO t [(cols)] FORMAT Arrow|ArrowStream`` with an IPC
-        body — column names validate against the target; missing columns
-        default to NULL (the RowBinary/Native ingest contract)."""
-        import re as _re
-
-        from clickhouseocp_spark.chsql import ChSqlError
-        from clickhouseocp_spark.formats import parse_arrow
-
-        m = _re.match(
-            r"(?is)^INSERT\s+INTO\s+(\w+)\s*(?:\(([\w\s,]+)\)\s*)?"
-            r"FORMAT\s+Arrow(Stream)?\s*$",
-            statement.strip(),
-        )
-        if not m:
-            raise ChSqlError(
-                f"not an INSERT ... FORMAT Arrow statement: {statement!r}"
+        incoming = incoming.select(
+            *(
+                c if c in names else F.lit(None).cast(fields[c].dataType).alias(c)
+                for c in target.columns
             )
-        return self._ingest_columnar(
-            m.group(1).lower(), *parse_arrow(data), stats=stats, fmt="Arrow"
         )
-
-    def insert_parquet(
-        self, statement: str, data: bytes, stats: dict | None = None
-    ) -> DataFrame:
-        """``INSERT INTO t [(cols)] FORMAT Parquet`` with a parquet-file
-        body (round 8) — the bulk format pandas/polars clients emit;
-        same name-validated NULL-defaulting contract as Arrow/Native."""
-        import re as _re
-
-        from clickhouseocp_spark.chsql import ChSqlError
-        from clickhouseocp_spark.formats import parse_parquet
-
-        m = _re.match(
-            r"(?is)^INSERT\s+INTO\s+(\w+)\s*(?:\(([\w\s,]+)\)\s*)?"
-            r"FORMAT\s+Parquet\s*$",
-            statement.strip(),
-        )
-        if not m:
-            raise ChSqlError(
-                f"not an INSERT ... FORMAT Parquet statement: {statement!r}"
-            )
-        return self._ingest_columnar(
-            m.group(1).lower(), *parse_parquet(data), stats=stats,
-            fmt="Parquet",
-        )
-
-    def _ingest_columnar(
-        self,
-        t: str,
-        names: list[str],
-        rows: list[tuple],
-        stats: dict | None = None,
-        fmt: str = "Arrow",
-    ) -> DataFrame:
-        """Shared tail of the columnar bulk-ingest paths: validate names
-        against the target, NULL-default absent columns, append by union."""
-        from clickhouseocp_spark.chsql import ChSqlError
-
-        target = self._base_table(t)
-        fields = {f.name: f for f in target.schema.fields}
-        unknown = [c for c in names if c not in fields]
-        if unknown:
-            raise ChSqlError(
-                f"{fmt} column names {unknown} not in table {t!r}"
-            )
-        if stats is not None:
-            stats["written_rows"] = len(rows)
-        from pyspark.sql.types import StructType
-
-        schema = StructType([fields[c] for c in names])
-        incoming = self.spark.createDataFrame(rows, schema)
-        dt = dict(target.dtypes)
-        for c in target.columns:
-            if c not in names:
-                incoming = incoming.withColumn(c, F.lit(None).cast(dt[c]))
-        return self._set_lineage(
-            t, target.unionByName(incoming.select(*target.columns))
-        )
+        return self._set_lineage(t, target.unionByName(incoming))
 
     def refresh_views(self) -> list[str]:
         """Recompute every refreshable materialized view (the scheduler-less

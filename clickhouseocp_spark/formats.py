@@ -5,6 +5,11 @@ TabSeparated(WithNames), CSV(WithNames), JSONEachRow, JSON, Values, Vertical,
 Pretty, PrettyCompact, Markdown; binary: RowBinary, Native, Arrow(Stream),
 Parquet — each render + parse).
 
+One table serves every format: ``render(df, fmt)`` renders any name in
+``FORMATS`` (``str`` for text, ``bytes`` for the ``BINARY`` entries),
+``BINARY`` pairs each binary format's render with its parse for ingest, and
+``content_type(fmt)`` gives the HTTP Content-Type.
+
 This is the INTERACTIVE surface: rendering collects to the driver exactly the
 way clickhouse-local streams to stdout, so ``max_rows`` caps the pull
 (ClickHouse's Pretty formats cap at 10 000 rows for the same reason).  Bulk
@@ -23,6 +28,7 @@ Escaping rules follow the ClickHouse format spec:
 from __future__ import annotations
 
 import datetime as _dt
+import functools as _functools
 import json as _json
 import math
 from decimal import Decimal
@@ -46,6 +52,10 @@ FORMATS = (
     "PrettyCompact",
     "RowBinary",
     "RowBinaryWithNamesAndTypes",
+    "Native",
+    "Arrow",
+    "ArrowStream",
+    "Parquet",
     "Markdown",
     "TabSeparatedWithNamesAndTypes",
     "CSVWithNamesAndTypes",
@@ -58,6 +68,24 @@ FORMATS = (
 _CANON = {f.lower(): f for f in FORMATS}
 _CANON["tsv"] = "TabSeparated"
 _CANON["tsvwithnames"] = "TabSeparatedWithNames"
+
+
+def canonical(fmt: str) -> str | None:
+    """The canonical name of FORMAT ``fmt`` (case- and underscore-
+    insensitive), or None when it is not a supported format."""
+    return _CANON.get(fmt.replace("_", "").lower())
+
+
+def content_type(fmt: str) -> str:
+    """The HTTP Content-Type of a reply rendered in ``fmt``."""
+    if canonical(fmt) in BINARY:
+        return "application/octet-stream"
+    f = fmt.lower()
+    if f.startswith("json"):
+        return "application/json; charset=UTF-8"
+    if f.startswith("csv"):
+        return "text/csv; charset=UTF-8"
+    return "text/plain; charset=UTF-8"
 
 
 def _txt(v, *, quote_strings: bool = False) -> str:
@@ -184,22 +212,20 @@ def render(
     fmt: str = "TabSeparated",
     max_rows: int = 10_000,
     stats: dict | None = None,
-) -> str:
-    """Render a DataFrame as ClickHouse FORMAT text (driver-side, capped).
+) -> str | bytes:
+    """Render a DataFrame in ClickHouse FORMAT ``fmt`` (driver-side, capped):
+    text for the text formats, bytes for the ``BINARY`` ones.
 
     ``stats`` (optional out-param) receives ``result_rows`` — the row count
     the render materialized — so the HTTP layer can emit
     ``X-ClickHouse-Summary`` without a second job."""
-    canon = _CANON.get(fmt.replace("_", "").lower())
+    canon = canonical(fmt)
     if canon is None:
         raise ValueError(
             f"unsupported FORMAT {fmt!r}; supported: {', '.join(FORMATS)}"
         )
-    if canon.startswith("RowBinary"):
-        raise ValueError(
-            "RowBinary is a binary format - use formats.render_rowbinary "
-            "(the HTTP layer routes it automatically)"
-        )
+    if canon in BINARY:
+        return BINARY[canon][0](df, max_rows=max_rows, stats=stats)
     if canon == "Null":
         # clickhouse-client's benchmark format: execute fully, emit nothing
         n = df.limit(max_rows).count()
@@ -756,3 +782,31 @@ def parse_arrow(data: bytes):
     names = table.schema.names
     rows = [tuple(d[n] for n in names) for d in table.to_pylist()]
     return names, rows
+
+
+def _names_rows(parse):
+    """A header-carrying parse that returns (names, types, rows), reduced
+    to the (names, rows) shape of the ``BINARY`` table."""
+
+    def names_rows(data: bytes):
+        names, _types, rows = parse(data)
+        return names, rows
+
+    return names_rows
+
+
+#: the binary FORMATs: canonical name → (render(df, max_rows=, stats=) →
+#: bytes, parse(data) → (names, rows)).  Plain RowBinary carries no header,
+#: so it has no parse: its ingest decodes the body against the target
+#: table's types.
+BINARY = {
+    "RowBinary": (render_rowbinary, None),
+    "RowBinaryWithNamesAndTypes": (
+        _functools.partial(render_rowbinary, with_names_and_types=True),
+        _names_rows(parse_rowbinary),
+    ),
+    "Native": (render_native, _names_rows(parse_native)),
+    "Arrow": (render_arrow, parse_arrow),
+    "ArrowStream": (_functools.partial(render_arrow, stream=True), parse_arrow),
+    "Parquet": (render_parquet, parse_parquet),
+}

@@ -8,9 +8,15 @@ with nothing beyond the stdlib http.server:
 - ``GET /ping`` → ``Ok.\\n`` (the CH liveness contract)
 - ``GET /?query=...`` and ``POST /`` (query in the body, or ``?query=`` +
   data body for ``INSERT ... FORMAT ...`` ingestion, CH-style)
-- trailing ``FORMAT <name>`` in the query or ``?default_format=`` chooses
-  the rendering (everything ``formats.render`` supports); default
-  TabSeparated, matching CH's HTTP default
+- one format table (``formats.py``) serves every format both ways: every
+  read goes through ``engine.run``, which renders the trailing
+  ``FORMAT <name>``, else ``?default_format=`` (param or session setting),
+  else TabSeparated, CH's HTTP default; Content-Type comes from
+  ``formats.content_type``.  An ``INSERT ... FORMAT <name>`` in
+  ``?query=`` whose ``<name>`` is a binary format (``formats.BINARY``)
+  takes its body through the one binary ingest, ``engine.insert_binary``,
+  and the body is never decoded as text; other INSERT bodies are text
+  appended to the statement
 - ``?session_id=`` scopes ``SET name = value`` statements to that HTTP
   session (CH session semantics: settings persist across requests with the
   same id; ``dialect`` and ``default_format`` take effect, everything else
@@ -22,6 +28,8 @@ with nothing beyond the stdlib http.server:
   inflated; responses are gzipped when the client sends
   ``Accept-Encoding: gzip`` AND ``enable_http_compression=1`` (param or
   session setting) — CH's exact opt-in rule
+- ``readonly=1`` (param or session setting, sticky) refuses every
+  mutation, binary ingest included, with code 164
 - errors → 500 with the real ClickHouse exception code for the common
   classes (60 UNKNOWN_TABLE, 62 SYNTAX_ERROR, 46 UNKNOWN_FUNCTION,
   47 UNKNOWN_IDENTIFIER, 36 BAD_ARGUMENTS; 1000 otherwise) in
@@ -53,31 +61,16 @@ gates query execution; Spark's scheduler interleaves the jobs.
 from __future__ import annotations
 
 import gzip
+import json
 import re
 import threading
+import time
 import uuid
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
-_CONTENT_TYPES = {
-    "json": "application/json; charset=UTF-8",
-    "csv": "text/csv; charset=UTF-8",
-}
-
-
-def _content_type(fmt: str) -> str:
-    f = fmt.lower()
-    if f.startswith("json"):
-        return _CONTENT_TYPES["json"]
-    if f.startswith("csv"):
-        return _CONTENT_TYPES["csv"]
-    if (
-        f.replace("_", "").startswith("rowbinary")
-        or f in ("native", "arrow", "arrowstream")
-    ):
-        return "application/octet-stream"
-    return "text/plain; charset=UTF-8"
-
+from clickhouseocp_spark.engine import detect_trailing_format
+from clickhouseocp_spark.formats import BINARY, canonical, content_type
 
 #: common ClickHouse exception codes (from the public ErrorCodes list) that
 #: HTTP drivers actually branch on
@@ -123,6 +116,12 @@ def exception_code(e: Exception) -> int:
 
 _SET_RE = re.compile(r"(?is)^\s*SET\s+(\w+)\s*=\s*('[^']*'|\S+?)\s*;?\s*$")
 
+#: an INSERT whose trailing FORMAT names its input data; with a body and a
+#: name in ``formats.BINARY`` the request is a binary ingest
+_INSERT_FORMAT_RE = re.compile(r"(?is)^\s*INSERT\s.*\bFORMAT\s+(\w+)\s*;?\s*$")
+
+_TEXT = content_type("TabSeparated")
+
 
 def _summary_json(
     result_rows: int = 0,
@@ -133,9 +132,7 @@ def _summary_json(
     """The ``X-ClickHouse-Summary`` JSON — CH emits every numeric field as a
     STRING (clickhouse-js et al. parse them with parseInt), in this key
     order."""
-    import json as _json
-
-    return _json.dumps(
+    return json.dumps(
         {
             "read_rows": str(result_rows),
             "read_bytes": str(result_bytes),
@@ -148,6 +145,21 @@ def _summary_json(
         },
         separators=(",", ":"),
     )
+
+
+def _error(
+    err: Exception | str, hdrs: dict, code: int | None = None
+) -> tuple[bytes, dict]:
+    """Body and headers of a CH error reply: the message, and its exception
+    code (``exception_code(err)`` for an exception) in
+    ``X-ClickHouse-Exception-Code``."""
+    if isinstance(err, Exception):
+        code, err = exception_code(err), f"{type(err).__name__}: {err}"
+    return f"{err}\n".encode(), {
+        **hdrs,
+        "Content-Type": _TEXT,
+        "X-ClickHouse-Exception-Code": str(code),
+    }
 
 
 class ChHttpServer:
@@ -171,27 +183,58 @@ class ChHttpServer:
             def log_message(self, *a):  # quiet: the engine's query_log records
                 pass
 
-            def _reply(self, code: int, body, fmt: str = "TabSeparated",
-                       extra: dict | None = None, gzip_ok: bool = False) -> None:
-                data = body if isinstance(body, bytes) else body.encode("utf-8")
+            def _reply(
+                self, code: int, data: bytes = b"", headers: dict | None = None
+            ) -> None:
                 self.send_response(code)
-                self.send_header("Content-Type", _content_type(fmt))
-                if gzip_ok and code == 200:
-                    data = gzip.compress(data)
-                    self.send_header("Content-Encoding", "gzip")
-                self.send_header("Content-Length", str(len(data)))
                 self.send_header("X-ClickHouse-Server-Display-Name", "spark")
-                for k, v in (extra or {}).items():
+                self._finish(data, {"Content-Type": _TEXT, **(headers or {})})
+
+            def _finish(self, data: bytes, headers: dict) -> None:
+                """The remaining headers, Content-Length and the body."""
+                for k, v in headers.items():
                     self.send_header(k, v)
+                self.send_header("Content-Length", str(len(data)))
                 self.end_headers()
                 self.wfile.write(data)
+
+            def _success(
+                self, out, fmt: str, stats: dict, t0: int, gzip_ok: bool,
+                progress: bool,
+            ) -> tuple[bytes, dict]:
+                """Body and headers of a successful reply, shared by the
+                streamed-progress and buffered replies: Content-Type, format,
+                time zone and Summary, plus the final cumulative Progress
+                event (equal to the Summary) when progress is on."""
+                if isinstance(out, str):
+                    if out and not out.endswith("\n"):
+                        out += "\n"
+                    out = out.encode("utf-8")
+                summary = _summary_json(
+                    result_rows=stats.get("result_rows", 0),
+                    result_bytes=len(out),
+                    written_rows=stats.get("written_rows", 0),
+                    elapsed_ns=time.perf_counter_ns() - t0,
+                )
+                tz = outer.engine.spark.conf.get(
+                    "spark.sql.session.timeZone", "Etc/UTC"
+                )
+                headers = {
+                    "Content-Type": content_type(fmt),
+                    "X-ClickHouse-Format": fmt,
+                    "X-ClickHouse-Timezone": tz or "Etc/UTC",
+                    "X-ClickHouse-Summary": summary,
+                }
+                if progress:
+                    headers["X-ClickHouse-Progress"] = summary
+                if gzip_ok:
+                    out = gzip.compress(out)
+                    headers["Content-Encoding"] = "gzip"
+                return out, headers
 
             def _progress_event(self, t0: int) -> str:
                 """One progress JSON in the CH header shape; task counts
                 from the Spark status tracker stand in for row counters."""
-                import json as _json
-                import time as _time
-
                 done = total = 0
                 try:
                     tr = outer.engine.spark.sparkContext.statusTracker()
@@ -204,14 +247,14 @@ class ChHttpServer:
                                 total += si.numTasks
                 except Exception:  # noqa: BLE001 — progress is best-effort
                     pass
-                return _json.dumps(
+                return json.dumps(
                     {
                         "read_rows": str(done),
                         "read_bytes": "0",
                         "written_rows": "0",
                         "written_bytes": "0",
                         "total_rows_to_read": str(total),
-                        "elapsed_ns": str(_time.perf_counter_ns() - t0),
+                        "elapsed_ns": str(time.perf_counter_ns() - t0),
                     },
                     separators=(",", ":"),
                 )
@@ -228,8 +271,6 @@ class ChHttpServer:
                 chunked-progress contract.  An error after the 200 status
                 line has streamed surfaces as the exception-code header +
                 message body, exactly CH's mid-stream behavior."""
-                import time as _time
-
                 interval = (
                     float(
                         params.get("http_headers_progress_interval_ms") or 100
@@ -262,50 +303,20 @@ class ChHttpServer:
                     self.flush_headers()
                     if not alive:
                         break
-                err = res.get("err")
-                if err is not None:
-                    msg = f"{type(err).__name__}: {err}\n".encode()
-                    self.send_header(
-                        "X-ClickHouse-Exception-Code",
-                        str(exception_code(err)),
-                    )
-                    self.send_header("Content-Type", _content_type("TabSeparated"))
-                    self.send_header("Content-Length", str(len(msg)))
-                    self.end_headers()
-                    self.wfile.write(msg)
+                if "err" in res:
+                    self._finish(*_error(res["err"], {}))
                     return
-                out = res.get("out") or ""
-                if out and isinstance(out, str) and not out.endswith("\n"):
-                    out += "\n"
-                data = out if isinstance(out, bytes) else out.encode("utf-8")
-                fmt = fmt or "TabSeparated"
-                tz = outer.engine.spark.conf.get(
-                    "spark.sql.session.timeZone", "Etc/UTC"
+                self._finish(
+                    *self._success(res["out"], fmt, stats, t0, False, True)
                 )
-                summary = _summary_json(
-                    result_rows=stats.get("result_rows", 0),
-                    result_bytes=len(data),
-                    written_rows=stats.get("written_rows", 0),
-                    elapsed_ns=_time.perf_counter_ns() - t0,
-                )
-                self.send_header("X-ClickHouse-Progress", summary)
-                self.send_header("X-ClickHouse-Summary", summary)
-                self.send_header("X-ClickHouse-Format", fmt)
-                self.send_header("X-ClickHouse-Timezone", tz or "Etc/UTC")
-                self.send_header("Content-Type", _content_type(fmt))
-                self.send_header("Content-Length", str(len(data)))
-                self.end_headers()
-                self.wfile.write(data)
 
             def _handle(self, body: bytes) -> None:
                 url = urlparse(self.path)
-                if url.path == "/ping":
-                    self._reply(200, "Ok.\n")
-                    return
-                if url.path == "/replicas_status":
-                    # the LB health endpoint; no replication lag exists in
-                    # the shared-storage architecture, so always Ok
-                    self._reply(200, "Ok.\n")
+                if url.path in ("/ping", "/replicas_status"):
+                    # /replicas_status is the LB health endpoint; no
+                    # replication lag exists in the shared-storage
+                    # architecture, so it is always Ok
+                    self._reply(200, b"Ok.\n")
                     return
                 params = {k: v[-1] for k, v in parse_qs(url.query).items()}
                 query_id = params.get("query_id") or str(uuid.uuid4())
@@ -314,309 +325,100 @@ class ChHttpServer:
                     try:
                         body = gzip.decompress(body)
                     except OSError:
-                        self._reply(400, "malformed gzip body\n", extra=hdrs)
+                        self._reply(400, b"malformed gzip body\n", hdrs)
                         return
                 query = params.get("query", "")
                 session = outer._session(params.get("session_id"))
+                settings = session or {}
                 # readonly is sticky: "1" from EITHER the query param or the
                 # session setting enforces it; an explicit readonly=0 param
                 # cannot override a session-level readonly=1 (CH forbids
                 # decreasing readonly once set).
-                readonly = "1" in (
-                    params.get("readonly"),
-                    (session or {}).get("readonly"),
-                )
-                if (
-                    readonly
-                    and body
-                    and re.search(
-                        r"(?is)FORMAT\s+(Arrow(Stream)?|Native|Parquet"
-                        r"|RowBinary(WithNamesAndTypes)?)\s*$",
-                        query or "",
-                    )
-                ):
-                    # binary bulk-ingest is a mutation: refuse BEFORE
-                    # dispatching to the Arrow/Native/RowBinary handlers
-                    self._reply(
-                        500,
-                        "Cannot execute query in readonly mode\n",
-                        extra={
-                            **hdrs,
-                            "X-ClickHouse-Exception-Code": str(_CODE_READONLY),
-                        },
-                    )
-                    return
-                if body and re.search(
-                    r"(?is)FORMAT\s+Arrow(Stream)?\s*$", query or ""
-                ):
-                    import time as _time
-
-                    stats: dict = {}
-                    t0 = _time.perf_counter_ns()
-                    try:
-                        with outer._gate:
-                            outer.engine.insert_arrow(query, body, stats=stats)
-                    except Exception as e:  # noqa: BLE001 — wire errors like CH
-                        self._reply(
-                            500,
-                            f"{type(e).__name__}: {e}\n",
-                            extra={
-                                **hdrs,
-                                "X-ClickHouse-Exception-Code": str(
-                                    exception_code(e)
-                                ),
-                            },
-                        )
-                        return
-                    summary = _summary_json(
-                        written_rows=stats.get("written_rows", 0),
-                        elapsed_ns=_time.perf_counter_ns() - t0,
-                    )
-                    extra = {**hdrs, "X-ClickHouse-Summary": summary}
-                    if params.get("send_progress_in_http_headers") == "1":
-                        extra["X-ClickHouse-Progress"] = summary
-                    self._reply(200, "", extra=extra)
-                    return
-                if body and re.search(
-                    r"(?is)FORMAT\s+Parquet\s*$", query or ""
-                ):
-                    import time as _time
-
-                    stats: dict = {}
-                    t0 = _time.perf_counter_ns()
-                    try:
-                        with outer._gate:
-                            outer.engine.insert_parquet(
-                                query, body, stats=stats
-                            )
-                    except Exception as e:  # noqa: BLE001 — wire errors like CH
-                        self._reply(
-                            500,
-                            f"{type(e).__name__}: {e}\n",
-                            extra={
-                                **hdrs,
-                                "X-ClickHouse-Exception-Code": str(
-                                    exception_code(e)
-                                ),
-                            },
-                        )
-                        return
-                    summary = _summary_json(
-                        written_rows=stats.get("written_rows", 0),
-                        elapsed_ns=_time.perf_counter_ns() - t0,
-                    )
-                    extra = {**hdrs, "X-ClickHouse-Summary": summary}
-                    if params.get("send_progress_in_http_headers") == "1":
-                        extra["X-ClickHouse-Progress"] = summary
-                    self._reply(200, "", extra=extra)
-                    return
-                if body and re.search(
-                    r"(?is)FORMAT\s+Native\s*$", query or ""
-                ):
-                    # binary column-major bulk-ingest
-                    import time as _time
-
-                    stats: dict = {}
-                    t0 = _time.perf_counter_ns()
-                    try:
-                        with outer._gate:
-                            outer.engine.insert_native(query, body, stats=stats)
-                    except Exception as e:  # noqa: BLE001 — wire errors like CH
-                        self._reply(
-                            500,
-                            f"{type(e).__name__}: {e}\n",
-                            extra={
-                                **hdrs,
-                                "X-ClickHouse-Exception-Code": str(
-                                    exception_code(e)
-                                ),
-                            },
-                        )
-                        return
-                    summary = _summary_json(
-                        written_rows=stats.get("written_rows", 0),
-                        elapsed_ns=_time.perf_counter_ns() - t0,
-                    )
-                    extra = {**hdrs, "X-ClickHouse-Summary": summary}
-                    if params.get("send_progress_in_http_headers") == "1":
-                        extra["X-ClickHouse-Progress"] = summary
-                    self._reply(200, "", extra=extra)
-                    return
-                if body and re.search(
-                    r"(?is)FORMAT\s+RowBinary(WithNamesAndTypes)?\s*$",
-                    query or "",
-                ):
-                    # binary bulk-ingest: never decode the body as text
-                    import time as _time
-
-                    stats: dict = {}
-                    t0 = _time.perf_counter_ns()
-                    try:
-                        with outer._gate:
-                            outer.engine.insert_rowbinary(query, body, stats=stats)
-                    except Exception as e:  # noqa: BLE001 — wire errors like CH
-                        self._reply(
-                            500,
-                            f"{type(e).__name__}: {e}\n",
-                            extra={
-                                **hdrs,
-                                "X-ClickHouse-Exception-Code": str(
-                                    exception_code(e)
-                                ),
-                            },
-                        )
-                        return
-                    summary = _summary_json(
-                        written_rows=stats.get("written_rows", 0),
-                        elapsed_ns=_time.perf_counter_ns() - t0,
-                    )
-                    extra = {**hdrs, "X-ClickHouse-Summary": summary}
-                    if params.get("send_progress_in_http_headers") == "1":
-                        extra["X-ClickHouse-Progress"] = summary
-                    self._reply(200, "", extra=extra)
-                    return
-                text = body.decode("utf-8") if body else ""
-                if query and text:
+                readonly = "1" in (params.get("readonly"), settings.get("readonly"))
+                mi = _INSERT_FORMAT_RE.match(query)
+                binary = bool(body and mi and canonical(mi.group(1)) in BINARY)
+                if body and not binary:
                     # CH ingestion shape: statement in ?query=, data in body
-                    query = query.rstrip() + "\n" + text
-                elif not query:
-                    query = text
+                    text = body.decode("utf-8")
+                    query = query.rstrip() + "\n" + text if query else text
                 if not query.strip():
-                    self._reply(400, "no query\n", extra=hdrs)
+                    self._reply(400, b"no query\n", hdrs)
                     return
-
                 if readonly and query.lstrip().split(None, 1)[0].upper() in (
                     _WRITE_HEADS
                 ):
                     self._reply(
                         500,
-                        "Cannot execute query in readonly mode\n",
-                        extra={
-                            **hdrs,
-                            "X-ClickHouse-Exception-Code": str(_CODE_READONLY),
-                        },
+                        *_error(
+                            "Cannot execute query in readonly mode",
+                            hdrs,
+                            _CODE_READONLY,
+                        ),
                     )
                     return
                 mset = _SET_RE.match(query)
-                if (
-                    mset
-                    and readonly
-                    and mset.group(1).lower() == "readonly"
-                    and mset.group(2).strip().strip("'") != "1"
-                ):
-                    # readonly can never be decreased once set (CH semantics)
-                    self._reply(
-                        500,
-                        "Cannot modify 'readonly' setting in readonly mode\n",
-                        extra={
-                            **hdrs,
-                            "X-ClickHouse-Exception-Code": str(_CODE_READONLY),
-                        },
-                    )
-                    return
-                if mset and session is not None:
-                    # session-scoped SET: persists for this session_id only,
-                    # does not leak into the shared engine (CH semantics)
-                    session[mset.group(1).lower()] = mset.group(2).strip().strip("'")
-                    self._reply(200, "", extra=hdrs)
-                    return
+                if mset:
+                    name = mset.group(1).lower()
+                    value = mset.group(2).strip().strip("'")
+                    if readonly and name == "readonly" and value != "1":
+                        # readonly can never be decreased once set
+                        self._reply(
+                            500,
+                            *_error(
+                                "Cannot modify 'readonly' setting in "
+                                "readonly mode",
+                                hdrs,
+                                _CODE_READONLY,
+                            ),
+                        )
+                        return
+                    if session is not None:
+                        # session-scoped SET: persists for this session_id
+                        # only, does not leak into the shared engine
+                        session[name] = value
+                        self._reply(200, b"", hdrs)
+                        return
 
-                from clickhouseocp_spark.engine import detect_trailing_format
-
-                fmt = params.get("default_format") or (
-                    session or {}
-                ).get("default_format")
-                dialect = (session or {}).get("dialect") or "clickhouse"
-                is_insert = query.lstrip().upper().startswith("INSERT")
-                trailing = detect_trailing_format(query)
-                if trailing:
-                    fmt = trailing  # trailing FORMAT wins (drives Content-Type)
-                elif fmt and not is_insert:
-                    query = query.rstrip().rstrip(";") + f" FORMAT {fmt}"
+                dialect = settings.get("dialect") or "clickhouse"
+                default_format = params.get("default_format") or settings.get(
+                    "default_format"
+                )
+                # the trailing FORMAT wins; it drives the Content-Type
+                fmt = detect_trailing_format(query) or default_format or (
+                    "TabSeparated"
+                )
                 want_gzip = (
                     "gzip" in (self.headers.get("Accept-Encoding") or "").lower()
                     and (
                         params.get("enable_http_compression")
-                        or (session or {}).get("enable_http_compression")
+                        or settings.get("enable_http_compression")
                     )
                     == "1"
                 )
-                import time as _time
-
-                stats = {}
-                t0 = _time.perf_counter_ns()
+                progress = (
+                    params.get("send_progress_in_http_headers")
+                    or settings.get("send_progress_in_http_headers")
+                ) == "1"
+                stats: dict = {}
+                t0 = time.perf_counter_ns()
 
                 def _execute():
                     with outer._gate:
-                        if (fmt or "").lower() in ("arrow", "arrowstream"):
-                            from clickhouseocp_spark.engine import (
-                                strip_trailing_format,
-                            )
-                            from clickhouseocp_spark.formats import render_arrow
+                        if binary:
+                            outer.engine.insert_binary(query, body, stats=stats)
+                            return b""
+                        return outer.engine.run(
+                            query,
+                            dialect=dialect,
+                            stats=stats,
+                            default_format=default_format,
+                        )
 
-                            df = outer.engine.sql(
-                                strip_trailing_format(query), dialect=dialect
-                            )
-                            out = render_arrow(
-                                df,
-                                stream=(fmt or "").lower() == "arrowstream",
-                                stats=stats,
-                            )
-                        elif (fmt or "").lower() == "parquet":
-                            from clickhouseocp_spark.engine import (
-                                strip_trailing_format,
-                            )
-                            from clickhouseocp_spark.formats import (
-                                render_parquet,
-                            )
-
-                            df = outer.engine.sql(
-                                strip_trailing_format(query), dialect=dialect
-                            )
-                            out = render_parquet(df, stats=stats)
-                        elif (fmt or "").lower() == "native":
-                            from clickhouseocp_spark.engine import (
-                                strip_trailing_format,
-                            )
-                            from clickhouseocp_spark.formats import render_native
-
-                            df = outer.engine.sql(
-                                strip_trailing_format(query), dialect=dialect
-                            )
-                            out = render_native(df, stats=stats)
-                        elif (fmt or "").replace("_", "").lower() in (
-                            "rowbinary", "rowbinarywithnamesandtypes"
-                        ):
-                            # binary wire format: bypass text rendering
-                            from clickhouseocp_spark.engine import (
-                                strip_trailing_format,
-                            )
-                            from clickhouseocp_spark.formats import (
-                                render_rowbinary,
-                            )
-
-                            df = outer.engine.sql(
-                                strip_trailing_format(query), dialect=dialect
-                            )
-                            out = render_rowbinary(
-                                df,
-                                with_names_and_types=(fmt or "")
-                                .replace("_", "")
-                                .lower()
-                                .endswith("withnamesandtypes"),
-                                stats=stats,
-                            )
-                        else:
-                            out = outer.engine.run(
-                                query, dialect=dialect, stats=stats
-                            )
-                    return out
-
-                progress_on = (
-                    params.get("send_progress_in_http_headers")
-                    or (session or {}).get("send_progress_in_http_headers")
-                ) == "1"
-                if progress_on and not want_gzip and not is_insert:
+                if (
+                    progress
+                    and not want_gzip
+                    and not query.lstrip().upper().startswith("INSERT")
+                ):
                     # CH's incremental progress wire shape: repeated
                     # X-ClickHouse-Progress header FIELDS streamed while the
                     # query executes, then the final headers + body.  The
@@ -625,9 +427,10 @@ class ChHttpServer:
                     # real; read_rows/total_rows_to_read are the Spark
                     # status tracker's completed/total task counts — the
                     # per-row scan counters live in JVM task metrics the
-                    # library deliberately doesn't reach into).  gzip is
-                    # buffered-only (the compressed length must be known
-                    # before headers close), matching the _reply path.
+                    # library deliberately doesn't reach into).  gzip and
+                    # INSERTs are buffered with one final cumulative event
+                    # (the compressed length must be known before headers
+                    # close).
                     self._stream_with_progress(
                         _execute, params, hdrs, t0, fmt, stats
                     )
@@ -635,45 +438,12 @@ class ChHttpServer:
                 try:
                     out = _execute()
                 except Exception as e:  # noqa: BLE001 — wire errors like CH
-                    self._reply(
-                        500,
-                        f"{type(e).__name__}: {e}\n",
-                        extra={
-                            **hdrs,
-                            "X-ClickHouse-Exception-Code": str(exception_code(e)),
-                        },
-                    )
+                    self._reply(500, *_error(e, hdrs))
                     return
-                if out and isinstance(out, str) and not out.endswith("\n"):
-                    out += "\n"
-                fmt = fmt or "TabSeparated"
-                tz = outer.engine.spark.conf.get(
-                    "spark.sql.session.timeZone", "Etc/UTC"
+                data, headers = self._success(
+                    out, fmt, stats, t0, want_gzip, progress
                 )
-                out_bytes = out if isinstance(out, bytes) else out.encode("utf-8")
-                summary = _summary_json(
-                    result_rows=stats.get("result_rows", 0),
-                    result_bytes=len(out_bytes),
-                    written_rows=stats.get("written_rows", 0),
-                    elapsed_ns=_time.perf_counter_ns() - t0,
-                )
-                extra = {
-                    **hdrs,
-                    "X-ClickHouse-Format": fmt,
-                    "X-ClickHouse-Timezone": tz or "Etc/UTC",
-                    "X-ClickHouse-Summary": summary,
-                }
-                if progress_on:
-                    # buffered fallback (gzip / INSERT) → one final
-                    # cumulative progress event
-                    extra["X-ClickHouse-Progress"] = summary
-                self._reply(
-                    200,
-                    out,
-                    fmt=fmt,
-                    extra=extra,
-                    gzip_ok=want_gzip,
-                )
+                self._reply(200, data, {**hdrs, **headers})
 
             def do_GET(self):  # noqa: N802 — http.server contract
                 self._handle(b"")

@@ -823,6 +823,31 @@ def test_into_outfile_reports_rows_written_under_max_rows(spark, sf_dir, tmp_pat
     assert len(out.read_text().splitlines()) == 3
 
 
+def test_binary_outfile_counts_rows_in_the_write_job(spark, sf_dir, tmp_path):
+    """A binary INTO OUTFILE (Parquet) runs the query once: the row count
+    comes from an Observation on the write, so the statement's job group
+    holds exactly one job and the reported count equals the file's rows."""
+    from clickhouseocp_spark.engine import ChSparkEngine
+
+    eng = ChSparkEngine(sf_dir, spark=spark)
+    eng.sql("SELECT * FROM lineitem")  # any schema probe runs outside
+    sc = spark.sparkContext
+    group = "binary-outfile-jobs"
+    out = tmp_path / "lineitem.parquet"
+    stats: dict = {}
+    sc.setJobGroup(group, "binary INTO OUTFILE")
+    try:
+        msg = eng.run(f"SELECT * FROM lineitem INTO OUTFILE '{out}'", stats=stats)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    n = spark.read.parquet(str(out)).count()
+    assert n == eng.sql("SELECT * FROM lineitem").count() > 0
+    assert msg == f"{n} rows written to {out}."
+    assert stats["written_rows"] == n
+    assert len(jobs) == 1, jobs
+
+
 def test_refreshable_materialized_view(spark, sf_dir, tmp_path):
     """CREATE MATERIALIZED VIEW ... REFRESH EVERY n unit AS SELECT stores the
     definition, materializes immediately, and SYSTEM REFRESH VIEW recomputes

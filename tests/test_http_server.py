@@ -550,17 +550,17 @@ def test_binary_ingest_error_paths(spark, sf_dir):
     eng = ChSparkEngine(sf_dir, spark=spark)
     bad = spark.createDataFrame([(1, "x")], "nope int, r_name string")
     with _pytest.raises(ChSqlError, match="not in table"):
-        eng.insert_native("INSERT INTO region FORMAT Native",
+        eng.insert_binary("INSERT INTO region FORMAT Native",
                           render_native(bad))
     with _pytest.raises(ChSqlError, match="not in table"):
-        eng.insert_arrow("INSERT INTO region FORMAT Arrow",
+        eng.insert_binary("INSERT INTO region FORMAT Arrow",
                          render_arrow(bad))
     with _pytest.raises(ChSqlError, match="not an INSERT"):
-        eng.insert_arrow("SELECT 1", b"")
+        eng.insert_binary("SELECT 1", b"")
 
 
 def test_rowbinary_ingest_error_path(spark, sf_dir):
-    """insert_rowbinary's malformed-statement path raises the wire-mapped
+    """insert_binary's malformed-statement path raises the wire-mapped
     ChSqlError (was a NameError — same latent bug class as Native/Arrow)."""
     import pytest as _pytest
 
@@ -569,7 +569,7 @@ def test_rowbinary_ingest_error_path(spark, sf_dir):
 
     eng = ChSparkEngine(sf_dir, spark=spark)
     with _pytest.raises(ChSqlError, match="not an INSERT"):
-        eng.insert_rowbinary("SELECT 1", b"")
+        eng.insert_binary("SELECT 1", b"")
 
 
 def test_native_multiblock_parse(spark):
@@ -708,7 +708,7 @@ def test_parquet_format_wire(spark, sf_dir):
             spark.createDataFrame([(1, "x")], "nope int, r_name string")
         )
         with _pytest.raises(ChSqlError, match="not in table"):
-            eng.insert_parquet("INSERT INTO region FORMAT Parquet", bad)
+            eng.insert_binary("INSERT INTO region FORMAT Parquet", bad)
     finally:
         srv.shutdown()
 
@@ -740,3 +740,134 @@ def test_explain_over_http(http_engine):
     status, body, _ = _get(http_engine, f"/?query={q}")
     assert status == 200
     assert "Filter" in body or "Relation" in body
+
+
+@pytest.mark.parametrize(
+    "fmt, statement, key",
+    [
+        ("RowBinary", "INSERT INTO region (r_regionkey) FORMAT RowBinary", 81),
+        ("Native", "INSERT INTO region FORMAT Native", 82),
+        ("Arrow", "INSERT INTO region FORMAT Arrow", 83),
+        ("Parquet", "INSERT INTO region FORMAT Parquet", 84),
+    ],
+)
+def test_binary_ingest_column_subset(spark, sf_dir, fmt, statement, key):
+    """A binary INSERT of a column subset succeeds over HTTP, reports
+    written_rows, and the row lands with the absent column NULL."""
+    from clickhouseocp_spark.formats import render
+
+    eng = ChSparkEngine(sf_dir, spark=spark)
+    body = render(spark.createDataFrame([(key,)], "r_regionkey int"), fmt)
+    srv = ChHttpServer(eng, port=0).start()
+    try:
+        req = urllib.request.Request(
+            f"http://127.0.0.1:{srv.port}/?query={urllib.parse.quote(statement)}",
+            data=body,
+            method="POST",
+        )
+        with urllib.request.urlopen(req) as r:
+            assert r.status == 200
+            s = json.loads(r.headers["X-ClickHouse-Summary"])
+            assert s["written_rows"] == "1"
+        got = eng.sql(f"SELECT r_name FROM region WHERE r_regionkey = {key}")
+        assert [row.r_name for row in got.collect()] == [None]
+    finally:
+        srv.shutdown()
+
+
+@pytest.mark.parametrize(
+    "dialect, query",
+    [
+        ("kusto", "region | where r_regionkey < 3 "
+                  "| project r_regionkey, r_name | order by r_regionkey asc"),
+        ("prql", "from region | filter r_regionkey < 3 "
+                 "| select {r_regionkey, r_name} | sort r_regionkey"),
+    ],
+)
+def test_dialect_session_default_format(http_engine, dialect, query):
+    """A KQL or PRQL session renders a text default_format (JSON, CSV) with
+    the same rows as its TabSeparated answer."""
+    import csv
+    import io
+
+    sid = f"default-format-{dialect}"
+    _get(http_engine, f"/?session_id={sid}&query="
+         + urllib.parse.quote(f"SET dialect = '{dialect}'"))
+    path = f"/?session_id={sid}&query={urllib.parse.quote(query)}"
+    status, tsv, _ = _get(http_engine, path)
+    want = [line.split("\t") for line in tsv.splitlines()]
+    assert status == 200 and len(want) == 3 and want[0][1] == "AFRICA"
+
+    status, body, headers = _get(http_engine, path + "&default_format=JSON")
+    assert status == 200 and headers["X-ClickHouse-Format"] == "JSON"
+    got = [[str(v) for v in r.values()] for r in json.loads(body)["data"]]
+    assert got == want
+
+    status, body, headers = _get(http_engine, path + "&default_format=CSV")
+    assert status == 200 and headers["Content-Type"].startswith("text/csv")
+    assert list(csv.reader(io.StringIO(body))) == want
+
+
+def _local_naive(v):
+    """Aware datetimes (Arrow/Parquet) as the naive local time Spark
+    collects; every other value unchanged."""
+    import datetime as dt
+
+    if isinstance(v, dt.datetime) and v.tzinfo is not None:
+        return v.astimezone().replace(tzinfo=None)
+    return v
+
+
+def _binary_names():
+    from clickhouseocp_spark.formats import BINARY
+
+    return sorted(BINARY)
+
+
+@pytest.mark.parametrize("name", _binary_names())
+def test_binary_format_table(spark, http_engine, name):
+    """Every formats.BINARY entry round-trips a mixed-type frame through
+    render and its own parse (plain RowBinary with explicit types), is
+    served as application/octet-stream, and engine.run() returns the HTTP
+    body byte for byte — a format added to the table is tested here."""
+    import datetime as dt
+
+    from clickhouseocp_spark.formats import (
+        BINARY,
+        _rb_spark_to_ch,
+        content_type,
+        parse_rowbinary,
+        render,
+    )
+
+    want = [
+        (1, "a", [1, 2], dt.date(2024, 2, 29), dt.datetime(2024, 1, 2, 3, 4, 5)),
+        (2, None, [], dt.date(1970, 1, 2), dt.datetime(1999, 12, 31, 23, 59, 59)),
+    ]
+    df = spark.createDataFrame(
+        want, "i int, s string, a array<bigint>, d date, ts timestamp"
+    )
+    blob = render(df, name)
+    assert isinstance(blob, bytes)
+    parse = BINARY[name][1]
+    if parse is None:
+        names = df.columns
+        rows = parse_rowbinary(blob, [
+            _rb_spark_to_ch(f.dataType.simpleString(), f.nullable)
+            for f in df.schema.fields
+        ])
+    else:
+        names, rows = parse(blob)
+    assert names == df.columns
+    assert [tuple(_local_naive(v) for v in r) for r in rows] == want
+    assert content_type(name) == "application/octet-stream"
+
+    q = (
+        "SELECT r_regionkey, r_name FROM region WHERE r_regionkey < 3 "
+        f"ORDER BY r_regionkey FORMAT {name}"
+    )
+    status, raw, headers = _get_raw(http_engine, "/?query=" + urllib.parse.quote(q))
+    assert status == 200
+    assert headers["Content-Type"] == "application/octet-stream"
+    assert headers["X-ClickHouse-Format"] == name
+    assert http_engine.engine.run(q) == raw
