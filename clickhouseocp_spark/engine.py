@@ -15,7 +15,6 @@ named operator registry.
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from clickhouseocp_spark.catalog import _session_key, local_frame, register_tables
@@ -337,6 +336,21 @@ class ChSparkEngine:
             self.spark, rows, "metric string, value bigint, description string"
         )
 
+    #: the exact SHOW statements (upper-cased, no trailing ``;``)
+    _SHOW = {
+        "SHOW TABLES": lambda self: self.system_tables(),
+        "SHOW DATABASES": lambda self: local_frame(
+            self.spark, [("default",)], "name string"
+        ),
+        # session engine: no concurrent query daemon → always empty, with
+        # the CH column surface so ops scripts parse the result
+        "SHOW PROCESSLIST": lambda self: local_frame(
+            self.spark,
+            [],
+            "query_id string, user string, query string, elapsed double",
+        ),
+    }
+
     def _sql_impl(self, query: str, dialect: str = "auto") -> DataFrame:
         if dialect == "auto" and getattr(self, "_default_dialect", None):
             dialect = self._default_dialect  # SET dialect = '...'
@@ -353,30 +367,20 @@ class ChSparkEngine:
             return self.execute(query)
         if head == "SET":
             return self._set_statement(query)
-        if head == "SHOW" and query.strip().upper().rstrip(";") == "SHOW TABLES":
-            return self.system_tables()
-        if head == "SHOW" and query.strip().upper().rstrip(";") == "SHOW DATABASES":
-            return local_frame(self.spark, [("default",)], "name string")
-        if head == "SHOW" and query.strip().upper().rstrip(";") == "SHOW PROCESSLIST":
-            # session engine: no concurrent query daemon → always empty,
-            # with the CH column surface so ops scripts parse the result
-            return local_frame(
-                self.spark,
-                [],
-                "query_id string, user string, query string, elapsed double",
-            )
+        stmt = query.strip().rstrip(";")
+        if head == "SHOW":
+            show = stmt.upper()
+            if show in self._SHOW:
+                return self._SHOW[show](self)
+            if show.startswith("SHOW CREATE TABLE"):
+                return self.show_create_table(stmt.split()[-1].lower())
         if head == "EXISTS":
-            t = query.strip().rstrip(";").split()[-1].lower()
+            t = stmt.split()[-1].lower()
             return local_frame(
                 self.spark, [(1 if t in self.tables else 0,)], "result int"
             )
-        if head == "SHOW" and query.strip().upper().rstrip(";").startswith(
-            "SHOW CREATE TABLE"
-        ):
-            t = query.strip().rstrip(";").split()[-1].lower()
-            return self.show_create_table(t)
         if head in ("DESCRIBE", "DESC"):
-            t = query.strip().rstrip(";").split()[-1].lower()
+            t = stmt.split()[-1].lower()
             self._table(t)  # raise on unknown, consistent error surface
             return self.spark.sql(f"DESCRIBE {t}")
         if head == "EXPLAIN":
@@ -405,440 +409,9 @@ class ChSparkEngine:
 
             return self.spark.sql(transpile_prql(query))
         if dialect == "kusto":
-            import re as _re
+            from clickhouseocp_spark.kql_stages import run_kql
 
-            from clickhouseocp_spark.kql import transpile_kql
-
-            # `| evaluate bag_unpack(col[, 'prefix'])` widens a property-bag
-            # (MAP) column into one column per distinct key IN THE DATA, so
-            # it needs a key scan and lives at the ENGINE level: one
-            # distinct-keys aggregate (rows = bag width — the output schema
-            # a user expects to read, bounded by construction), then a pure
-            # projection.  Keys emit in sorted order (Kusto sorts unpacked
-            # columns by name).
-            mbu = _re.match(
-                r"(?s)^(.*?)\|\s*evaluate\s+bag_unpack\s*\(\s*"
-                r"([A-Za-z_]\w*)\s*(?:,\s*'([^']*)')?\s*\)\s*"
-                r"(\|.*)?$",
-                query.strip(),
-            )
-            if mbu:
-                from pyspark.sql import functions as F
-
-                df = self.spark.sql(transpile_kql(mbu.group(1)))
-                bag, prefix = mbu.group(2), mbu.group(3) or ""
-                field = {f.name: f for f in df.schema.fields}.get(bag)
-                if field is None or not field.dataType.typeName() == "map":
-                    from clickhouseocp_spark.chsql import ChSqlError
-
-                    raise ChSqlError(
-                        f"evaluate bag_unpack: {bag!r} is not a map column"
-                    )
-                keys = sorted(
-                    r[0]
-                    for r in df.select(
-                        F.explode(F.map_keys(F.col(bag))).alias("k")
-                    ).distinct().collect()
-                    if r[0] is not None
-                )
-                others = [c for c in df.columns if c != bag]
-                out = df.select(
-                    *others,
-                    *[
-                        F.element_at(F.col(bag), F.lit(k)).alias(prefix + k)
-                        for k in keys
-                    ],
-                )
-                trail = mbu.group(4)
-                if trail:
-                    # trailing stages re-enter the ENGINE path over the
-                    # widened relation, so chained engine-level operators
-                    # (getschema / search / narrow / another bag_unpack)
-                    # keep working (same pattern as evaluate narrow)
-                    out.createOrReplaceTempView("__kql_bag_unpack")
-                    return self.sql(
-                        "__kql_bag_unpack " + trail, dialect="kusto"
-                    )
-                return out
-            # `find [withsource=Col] [in (T1, ...)] where Pred` WITHOUT a
-            # project clause — the schema-aware Kusto form lives at the
-            # ENGINE level: resolve every table's schema, output the
-            # first-seen union of their columns with typed-NULL padding,
-            # and drop tables whose schema cannot bind the predicate
-            # (Kusto: a predicate over a missing column never matches).
-            # The projected text form stays in the transpiler.
-            mfd = _re.match(
-                r"(?is)^find\s+(?:withsource\s*=\s*(\w+)\s+)?"
-                r"(?:in\s*\(([^)]+)\)\s*)?where\s+(.+)$",
-                query.strip(),
-            )
-            if mfd:
-                from clickhouseocp_spark.kql import _split_top as _ksplit
-
-                _fd_parts = _ksplit(mfd.group(3), "|")
-            if mfd and not _re.search(r"(?i)\bproject\b", _fd_parts[0]):
-                from pyspark.sql import functions as F
-
-                from clickhouseocp_spark.kql import _expr as _kql_expr
-
-                srccol = mfd.group(1) or "source_"
-                names = (
-                    [t.strip() for t in mfd.group(2).split(",")]
-                    if mfd.group(2)
-                    else sorted(self.tables)
-                )
-                pred = _kql_expr(_fd_parts[0].strip())
-                # first-seen union of output columns with their first types
-                out_cols: list[tuple[str, str]] = []
-                seen = set()
-                for t in names:
-                    for c, dt in self._table(t).dtypes:
-                        if c not in seen:
-                            seen.add(c)
-                            out_cols.append((c, dt))
-                legs = []
-                for t in names:
-                    df = self._table(t)
-                    try:
-                        flt = df.filter(F.expr(pred))
-                    except AnalysisException as e:
-                        # Kusto find skips ONLY tables whose schema cannot
-                        # bind the predicate; a type error or bad function
-                        # on a table that HAS the columns must surface, not
-                        # silently drop the leg (advice r10).
-                        cond = ""
-                        try:
-                            cond = e.getCondition() or ""
-                        except Exception:
-                            pass
-                        if "UNRESOLVED_COLUMN" in cond or (
-                            not cond and "UNRESOLVED_COLUMN" in str(e)
-                        ):
-                            continue  # predicate references a missing column
-                        raise
-                    have = dict(df.dtypes)
-                    legs.append(
-                        flt.select(
-                            F.lit(t).alias(srccol),
-                            *[
-                                # same-named columns may carry DIFFERENT
-                                # types across tables — try_cast pads to
-                                # the first-seen type without an ANSI
-                                # runtime error (NULL on mismatch)
-                                (
-                                    F.col(c).cast(dt)
-                                    if have[c] == dt
-                                    else F.expr(f"try_cast({c} AS {dt})")
-                                ).alias(c)
-                                if c in have
-                                else F.lit(None).cast(dt).alias(c)
-                                for c, dt in out_cols
-                            ],
-                        )
-                    )
-                if not legs:
-                    from clickhouseocp_spark.chsql import ChSqlError
-
-                    raise ChSqlError(
-                        "find: the predicate binds in none of the tables"
-                    )
-                out = legs[0]
-                for leg in legs[1:]:
-                    out = out.unionByName(leg)
-                if len(_fd_parts) > 1:
-                    # trailing stages re-enter the engine path over the
-                    # padded union (the bag_unpack pattern)
-                    out.createOrReplaceTempView("__kql_find")
-                    return self.sql(
-                        "__kql_find | " + " | ".join(_fd_parts[1:]),
-                        dialect="kusto",
-                    )
-                return out
-            # DATABASE-WIDE `search "term"` (no table prefix) — Kusto
-            # scans every table; engine level: per-table OR over its
-            # string columns, results as the same first-seen padded union
-            # as schema-aware find (source_ carries the table name; Kusto
-            # spells it $table, renamed for SQL/pandas portability).
-            msg = _re.match(
-                r"(?is)^search\s+"
-                r"(?:kind\s*=\s*(case_sensitive|case_insensitive)\s+)?"
-                r"['\"](.*?)['\"]\s*(\|.*)?$",
-                query.strip(),
-            )
-            if msg:
-                from pyspark.sql import functions as F
-
-                cs_flag = msg.group(1) == "case_sensitive"
-                term = msg.group(2)
-                names = sorted(self.tables)
-                out_cols: list[tuple[str, str]] = []
-                seen = set()
-                for t in names:
-                    for c, dt in self._table(t).dtypes:
-                        if c not in seen:
-                            seen.add(c)
-                            out_cols.append((c, dt))
-                legs = []
-                for t in names:
-                    df = self._table(t)
-                    have = dict(df.dtypes)
-                    scols = [c for c, dt in df.dtypes if dt == "string"]
-                    if not scols:
-                        continue
-                    cond = None
-                    for c in scols:
-                        e = (
-                            F.col(c).contains(term)
-                            if cs_flag
-                            else F.lower(F.col(c)).contains(term.lower())
-                        )
-                        cond = e if cond is None else (cond | e)
-                    legs.append(
-                        df.filter(F.coalesce(cond, F.lit(False))).select(
-                            F.lit(t).alias("source_"),
-                            *[
-                                # same-named columns may carry DIFFERENT
-                                # types across tables — try_cast pads to
-                                # the first-seen type without an ANSI
-                                # runtime error (NULL on mismatch)
-                                (
-                                    F.col(c).cast(dt)
-                                    if have[c] == dt
-                                    else F.expr(f"try_cast({c} AS {dt})")
-                                ).alias(c)
-                                if c in have
-                                else F.lit(None).cast(dt).alias(c)
-                                for c, dt in out_cols
-                            ],
-                        )
-                    )
-                if legs:
-                    out = legs[0]
-                    for leg in legs[1:]:
-                        out = out.unionByName(leg)
-                else:
-                    out = self.spark.range(0).select(
-                        F.lit("").alias("source_")
-                    )
-                gtrail = msg.group(3)
-                if gtrail:
-                    out.createOrReplaceTempView("__kql_search_db")
-                    return self.sql(
-                        "__kql_search_db " + gtrail, dialect="kusto"
-                    )
-                return out
-            # mining plugins WITHOUT an explicit column list — Kusto
-            # infers the attribute set from the input schema, so the
-            # bare forms live at the ENGINE level: resolve the prefix
-            # pipeline's schema, take its STRING columns (minus
-            # diffpatterns' split column), and re-enter the text lowering
-            # with the columns appended.  >5 string columns raises (the
-            # CUBE bound) — name them explicitly.
-            mmi = _re.match(
-                r"(?s)^(.*?)\|\s*evaluate\s+"
-                r"(basket|autocluster|diffpatterns)\s*\((.+?)\)\s*(\|.*)?$",
-                query.strip(),
-            )
-            if mmi:
-                from clickhouseocp_spark.kql import _split_top as _msplit
-
-                margs = _msplit(mmi.group(3))
-                mop = mmi.group(2).lower()
-                bare_n = {"basket": 1, "autocluster": 1, "diffpatterns": 4}
-                if len(margs) == bare_n[mop]:
-                    from clickhouseocp_spark.chsql import ChSqlError
-
-                    df = self.spark.sql(transpile_kql(mmi.group(1)))
-                    excl = (
-                        {margs[0].strip()} if mop == "diffpatterns" else set()
-                    )
-                    mcols = [
-                        c
-                        for c, dt in df.dtypes
-                        if dt == "string" and c not in excl
-                    ]
-                    if not mcols:
-                        raise ChSqlError(
-                            f"evaluate {mop}: no string attribute columns "
-                            "in the input — project some first"
-                        )
-                    if len(mcols) > 5:
-                        raise ChSqlError(
-                            f"evaluate {mop}: {len(mcols)} string columns "
-                            "exceed the CUBE bound — name ≤5 explicitly"
-                        )
-                    rebuilt = (
-                        f"{mmi.group(1)} | evaluate {mop}("
-                        f"{', '.join(margs + mcols)})" + (mmi.group(4) or "")
-                    )
-                    return self.sql(rebuilt, dialect="kusto")
-            # `| evaluate pivot(col, agg(x))` WITHOUT the value list —
-            # Kusto derives the output columns from the data, so the
-            # 2-arg form lives at the ENGINE level: one distinct scan of
-            # the pivot column (rows = output schema width, the bag_unpack
-            # bound), then re-enter the TEXT pivot with the derived
-            # values.  The 3+-arg (explicit values) form stays pure-text.
-            mpv = _re.match(
-                r"(?s)^(.*?)\|\s*evaluate\s+pivot\s*\((.+?)\)\s*(\|.*)?$",
-                query.strip(),
-            )
-            if mpv:
-                from clickhouseocp_spark.kql import _split_top
-
-                pargs = _split_top(mpv.group(2))
-                if len(pargs) == 2:
-                    from pyspark.sql import functions as F
-
-                    pcol = pargs[0].strip()
-                    df = self.spark.sql(transpile_kql(mpv.group(1)))
-                    vals = sorted(
-                        r[0]
-                        for r in df.select(pcol).distinct().collect()
-                        if r[0] is not None
-                    )
-                    if not vals:
-                        from clickhouseocp_spark.chsql import ChSqlError
-
-                        raise ChSqlError(
-                            f"evaluate pivot: no non-NULL values in {pcol!r}"
-                        )
-                    # bare str(v) is only valid KQL for plain numerics:
-                    # date/timestamp/Decimal/bool distinct values must be
-                    # re-injected QUOTED or the rebuilt pivot is invalid
-                    # SQL (advice r10); Spark's comparison coerces the
-                    # string literal back to the column type.
-                    lit = ", ".join(
-                        str(v)
-                        if isinstance(v, (int, float)) and not isinstance(v, bool)
-                        else "'" + str(v).replace("'", "''") + "'"
-                        for v in vals
-                    )
-                    rebuilt = (
-                        f"{mpv.group(1)} | evaluate pivot({pcol}, "
-                        f"{pargs[1]}, {lit})" + (mpv.group(3) or "")
-                    )
-                    return self.sql(rebuilt, dialect="kusto")
-            # `| evaluate narrow()` — transpose wide rows into
-            # (Row, Column, Value) triples: needs the resolved schema, so
-            # engine level; lowers to one stack() (CROSS-free lateral
-            # expansion inside the scan stage, |cols| values per row).
-            mnr = _re.match(
-                r"(?s)^(.*?)\|\s*evaluate\s+narrow\s*\(\s*\)\s*(\|.*)?$",
-                query.strip(),
-            )
-            if mnr:
-                from pyspark.sql import functions as F
-
-                df = self.spark.sql(transpile_kql(mnr.group(1)))
-                pairs = ", ".join(
-                    f"'{c}', CAST({c} AS STRING)" for c in df.columns
-                )
-                # Row is UNIQUE per source row but not dense (Kusto's dense
-                # ordinal assumes serialized input; a global row_number
-                # would single-partition the world — pipe `serialize`
-                # upstream when a dense ordinal matters)
-                out = df.withColumn(
-                    "Row", F.monotonically_increasing_id()
-                ).select(
-                    "Row",
-                    F.expr(
-                        f"stack({len(df.columns)}, {pairs}) "
-                        "AS (Column, Value)"
-                    ),
-                )
-                if mnr.group(2):
-                    # trailing stages re-enter the ENGINE path over the
-                    # narrowed relation (registered as a session view), so
-                    # chained engine-level operators keep working
-                    out.createOrReplaceTempView("__kql_narrow")
-                    return self.sql(
-                        "__kql_narrow " + mnr.group(2), dialect="kusto"
-                    )
-                return out
-            # `| getschema` needs the resolved schema, so it lives at the
-            # ENGINE level: transpile the prefix pipeline, analyze (no
-            # execution — schema comes from the logical plan), and emit
-            # Kusto's introspection shape
-            mgs = _re.match(r"(?s)^(.*?)\|\s*getschema\s*$", query.strip())
-            if mgs:
-                df = self.spark.sql(transpile_kql(mgs.group(1)))
-                kusto_types = {
-                    "bigint": "long", "int": "int", "smallint": "int",
-                    "tinyint": "int", "double": "real", "float": "real",
-                    "string": "string", "boolean": "bool",
-                    "timestamp": "datetime", "timestamp_ntz": "datetime",
-                    "date": "datetime", "binary": "dynamic",
-                }
-                # Kusto's getschema DataType column carries CLR type names,
-                # not capitalized kusto names (clients key off these)
-                clr_names = {
-                    "long": "System.Int64", "int": "System.Int32",
-                    "real": "System.Double", "string": "System.String",
-                    "bool": "System.SByte", "datetime": "System.DateTime",
-                    "dynamic": "System.Object",
-                    "decimal": "System.Data.SqlTypes.SqlDecimal",
-                    "timespan": "System.TimeSpan", "guid": "System.Guid",
-                }
-                rows = []
-                for i, f in enumerate(df.schema.fields):
-                    simple = f.dataType.simpleString()
-                    kt = kusto_types.get(
-                        simple,
-                        "dynamic" if simple.startswith(
-                            ("array", "map", "struct")
-                        ) else "string",
-                    )
-                    rows.append((f.name, i, clr_names[kt], kt))
-                return local_frame(
-                    self.spark, rows,
-                    "ColumnName string, ColumnOrdinal int, "
-                    "DataType string, ColumnType string",
-                )
-            # `| search "term"` needs the resolved schema (it matches across
-            # ALL string columns), so it lives at the ENGINE level too:
-            # transpile the prefix, read string columns off the logical
-            # plan, and filter on an OR of per-column contains predicates
-            # (case-insensitive by default, Kusto's `kind=default`).
-            msr = _re.match(
-                r"(?s)^(.*?)\|\s*search\s+"
-                r"(?:kind\s*=\s*(case_sensitive|case_insensitive)\s+)?"
-                r"['\"](.*?)['\"]\s*(\|.*)?$",
-                query.strip(),
-            )
-            if msr:
-                from pyspark.sql import functions as F
-
-                df = self.spark.sql(transpile_kql(msr.group(1)))
-                cs = msr.group(2) == "case_sensitive"
-                term = msr.group(3)
-                scols = [
-                    f.name
-                    for f in df.schema.fields
-                    if f.dataType.simpleString() == "string"
-                ]
-                if not scols:
-                    out = df.filter(F.lit(False))
-                else:
-                    cond = None
-                    for c in scols:
-                        e = (
-                            F.col(c).contains(term)
-                            if cs
-                            else F.lower(F.col(c)).contains(term.lower())
-                        )
-                        cond = e if cond is None else (cond | e)
-                    out = df.filter(F.coalesce(cond, F.lit(False)))
-                trail = msr.group(4)
-                if trail:
-                    # trailing stages re-enter the engine path over the
-                    # matched relation (the bag_unpack pattern) — the
-                    # README's `| search "x" | count` shape
-                    out.createOrReplaceTempView("__kql_search")
-                    return self.sql(
-                        "__kql_search " + trail, dialect="kusto"
-                    )
-                return out
-            return self.spark.sql(transpile_kql(query))
+            return run_kql(self, query)
         if dialect in ("clickhouse", "ch"):
             df = self._run_ch(query)
             if df is None:
@@ -861,7 +434,7 @@ class ChSparkEngine:
     def _expand_columns_matcher(self, query: str) -> str:
         """CH's dynamic column selector ``COLUMNS('re') [APPLY fn]``: expand
         to an explicit column list BEFORE transpilation (it needs the
-        schema, so it lives at the engine level like getschema/search).
+        schema, like the Kusto stages in ``kql_stages.py``).
         The table is resolved from the statement's first ``FROM <name>``;
         ``APPLY fn`` wraps each matched column, producing CH's
         ``fn(col)``-style output names.  Chained APPLY and EXCEPT after

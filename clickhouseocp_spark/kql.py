@@ -150,8 +150,11 @@ combinators, zero exchanges beyond the make-series aggregate itself.
 Join execution hints: ``hint.strategy=broadcast`` → BROADCAST(kusto-left),
 ``hint.strategy=shuffle`` / ``hint.shufflekey`` → SHUFFLE_HASH,
 ``hint.num_partitions`` accepted-and-ignored (AQE owns partition counts).
-``| evaluate bag_unpack(col[, 'prefix'])`` lives at the ENGINE level —
-data-driven widening needs a key scan (engine.py).
+Stages that need the input's schema or a scan of its data
+(``evaluate bag_unpack``/``narrow``, 2-arg ``evaluate pivot``, bare
+``basket``/``autocluster``/``diffpatterns``, ``getschema``, ``search`` and
+the unprojected ``find``) run in ``kql_stages.py``, which transpiles the
+text between them with this module.
 
 Everything else inside scalar expressions passes through to Spark SQL
 verbatim (same policy as prql.py — KQL's scalar layer is close enough to SQL for the

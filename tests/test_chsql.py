@@ -1319,10 +1319,9 @@ def test_kql_ipv4_family_and_hll(spark, sf_dir):
 
 
 def test_kql_search_trailing_and_database_wide(spark, sf_dir):
-    """Round-10 search completions: trailing stages after table-scoped
-    search re-enter the engine (the README `| search "x" | count`
-    shape), and prefix-less search scans EVERY table with typed-NULL
-    padding + a source_ column."""
+    """Round-10 search completions: stages may follow a table-scoped
+    search (the README `| search "x" | count` shape), and prefix-less
+    search scans EVERY table with typed-NULL padding + a source_ column."""
     from clickhouseocp_spark.engine import ChSparkEngine
 
     eng = ChSparkEngine(sf_dir, spark=spark)
@@ -2433,9 +2432,8 @@ def test_kql_make_bag_mechanics(spark):
 
 
 def test_kql_engine_ops_chain(spark):
-    """Engine-level KQL operators chain: evaluate narrow/bag_unpack resume
-    through the ENGINE path, so a following getschema/search still works
-    (round-8 ordering: widening ops match before the end-anchored ops)."""
+    """Schema-aware KQL stages chain: a getschema/search after evaluate
+    narrow/bag_unpack reads the widened relation's schema."""
     from clickhouseocp_spark.engine import ChSparkEngine
 
     eng = ChSparkEngine("/root/testdata/sf0.001", spark)
@@ -2452,6 +2450,124 @@ def test_kql_engine_ops_chain(spark):
         dialect="kusto",
     ).count()
     assert n == 1
+
+
+#: statements whose schema-aware stage sits after another one, or whose
+#: later stages use a `let`; expected rows from (views, events) = the
+#: number of `view` events and of all events
+_STAGE_WALK_CASES = [
+    pytest.param(
+        "events | extend b = bag_pack('t', event_type)"
+        " | project event_id, event_type, b | search 'view'"
+        " | evaluate bag_unpack(b) | summarize n = countif(t == 'view')",
+        lambda views, events: [(views,)],
+        id="search-then-bag_unpack",
+    ),
+    pytest.param(
+        "events | project event_id, event_type | search 'view'"
+        " | evaluate narrow() | count",
+        lambda views, events: [(2 * views,)],
+        id="search-then-narrow",
+    ),
+    pytest.param(
+        "events | project event_id, event_type | evaluate narrow()"
+        " | evaluate pivot(Column, count())"
+        " | summarize i = sum(event_id), t = sum(event_type)",
+        lambda views, events: [(events, events)],
+        id="narrow-then-pivot",
+    ),
+    pytest.param(
+        "events | getschema | where ColumnType == 'long' | project ColumnName",
+        lambda views, events: [("event_id",), ("user_id",)],
+        id="getschema-then-where",
+    ),
+    pytest.param(
+        "events | getschema | count",
+        lambda views, events: [(6,)],
+        id="getschema-then-count",
+    ),
+    pytest.param(
+        "let k = 'view'; events | project event_id, event_type"
+        " | evaluate narrow() | where Value == k | count",
+        lambda views, events: [(views,)],
+        id="let-after-narrow",
+    ),
+    pytest.param(
+        "let lim = 5; events | search 'view' | take lim"
+        " | summarize n = count(), v = countif(event_type == 'view')",
+        lambda views, events: [(5, 5)],
+        id="let-after-search",
+    ),
+]
+
+
+@pytest.mark.parametrize("query, expected", _STAGE_WALK_CASES)
+def test_kql_stage_walk(spark, sf_dir, query, expected):
+    """Schema-aware stages chain in any order, `getschema` may have
+    stages after it, and every stage sees the statement's `let`s."""
+    from clickhouseocp_spark.engine import ChSparkEngine
+
+    eng = ChSparkEngine(sf_dir, spark)
+    events = eng._table("events")
+    views = events.filter(F.col("event_type") == "view").count()
+    got = [tuple(r) for r in eng.sql(query, dialect="kusto").collect()]
+    assert got == expected(views, events.count())
+
+
+def test_kql_stage_views_are_per_statement(spark, sf_dir):
+    """Two threads running different `| search | summarize` statements on
+    one engine each get their own count, and no intermediate view is left
+    in the session catalog."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from clickhouseocp_spark.engine import ChSparkEngine
+
+    eng = ChSparkEngine(sf_dir, spark)
+    queries = [
+        "events | project event_id, event_type | search 'view'"
+        " | summarize n = count()",
+        "nation | project n_name | search 'A' | summarize n = count()",
+    ]
+
+    def run(q: str) -> int:
+        return eng.sql(q, dialect="kusto").first()[0]
+
+    single = [run(q) for q in queries]
+    assert single[0] != single[1]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(2) as pool:
+            futures = [pool.submit(lambda q=q: [run(q) for _ in range(25)])
+                       for q in queries]
+            got = [f.result(timeout=600) for f in futures]
+    finally:
+        sys.setswitchinterval(switch)
+    assert got == [[single[0]] * 25, [single[1]] * 25]
+    leaked = [t.name for t in spark.catalog.listTables()
+              if t.name.startswith("__kql")]
+    assert leaked == []
+
+
+@pytest.mark.parametrize(
+    "query",
+    [
+        "events | search 'view' | count",
+        "documents | project lang, source | evaluate basket(0.1)",
+        "events | project event_type | evaluate pivot(event_type, count())",
+        "datatable(rid: long, s: string) [1, 'x'] | evaluate narrow()"
+        " | getschema",
+    ],
+)
+def test_kql_stage_statement_logs_one_row(spark, sf_dir, query):
+    """A KQL statement with a schema-aware stage is one `system.query_log`
+    row carrying the user's text."""
+    from clickhouseocp_spark.engine import ChSparkEngine
+
+    eng = ChSparkEngine(sf_dir, spark)
+    eng.sql(query, dialect="kusto").collect()
+    assert [(r[3], r[6]) for r in eng._query_log] == [(query, "QueryFinish")]
 
 
 def test_round8_series_edges(spark):
