@@ -7915,7 +7915,7 @@ def _rewrite_scalar_with(tokens: list[str]) -> list[str]:
 def _rewrite_system_tables(tokens: list[str]) -> list[str]:
     """``system.X`` → ``system_X`` and ``information_schema.X`` →
     ``information_schema_X`` (the engine registers both introspection
-    surfaces under those view names — ChSparkEngine._ensure_system_views;
+    surfaces under those view names — ChSparkEngine._SYSTEM_VIEWS;
     CH ships the information_schema compat layer for BI tools)."""
     out: list[str] = []
     i = 0

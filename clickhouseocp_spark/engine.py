@@ -15,11 +15,32 @@ named operator registry.
 
 from __future__ import annotations
 
+import os
+import re
+from typing import Callable, NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from clickhouseocp_spark.catalog import _session_key, local_frame, register_tables
+from clickhouseocp_spark.chsql import (
+    _PARAM_RE,
+    ChSqlError,
+    _map_type,
+    expand_param_views,
+    transpile_expr,
+)
 from clickhouseocp_spark.functions import clickhouse_names as _ch
 from clickhouseocp_spark.session import get_spark
+
+_HEAD_RE = re.compile(r"\s*(\S+)")
+
+
+def statement_head(query: str) -> str:
+    """The first keyword of *query*, upper-cased ("" for blank text): the
+    key every front door routes and classifies a statement by."""
+    m = _HEAD_RE.match(query)
+    return m.group(1).upper() if m else ""
 
 
 def detect_trailing_format(query: str) -> str | None:
@@ -28,23 +49,18 @@ def detect_trailing_format(query: str) -> str | None:
     data format, not a rendering).  The single source of truth shared by
     ``ChSparkEngine.run`` and the HTTP layer (``server.py``) so rendering
     and Content-Type can never desynchronize."""
-    import re as _re
-
-    head = query.lstrip().split(None, 1)[0].upper() if query.strip() else ""
-    if head == "INSERT":
+    if statement_head(query) == "INSERT":
         return None
-    m = _re.search(r"\bFORMAT\s+(\w+)\s*;?\s*$", query, _re.IGNORECASE)
+    m = re.search(r"\bFORMAT\s+(\w+)\s*;?\s*$", query, re.IGNORECASE)
     return m.group(1) if m else None
 
 
 def strip_trailing_format(query: str) -> str:
     """The statement without its trailing ``FORMAT <name>`` clause (no-op
     when absent / INSERT) — for callers that render out-of-band."""
-    import re as _re
-
     if detect_trailing_format(query) is None:
         return query
-    return _re.sub(r"\bFORMAT\s+\w+\s*;?\s*$", "", query, flags=_re.IGNORECASE)
+    return re.sub(r"\bFORMAT\s+\w+\s*;?\s*$", "", query, flags=re.IGNORECASE)
 
 
 def _executed_plan_metrics(df: DataFrame) -> tuple[int | None, int | None]:
@@ -96,6 +112,100 @@ def _split_assignments(text: str) -> list[str]:
     return [render(p) for p in _split_top(tokenize(text), ",") if p]
 
 
+def _column_list(text: str | None) -> list[str] | None:
+    """The names in an INSERT's ``(a, b, ...)`` column list."""
+    return [c.strip() for c in text.split(",")] if text else None
+
+
+def _unsupported(statement: str) -> ChSqlError:
+    return ChSqlError(
+        f"unsupported statement: {statement.strip().rstrip(';')[:80]!r}"
+    )
+
+
+class _Statement(NamedTuple):
+    """One statement form: one row of the statement table."""
+
+    head: str  # its leading keywords; the first is the routing key
+    pattern: re.Pattern  # anchored, matched against the stripped text
+    handler: Callable[..., DataFrame]  # engine method taking the groups
+    writes: bool  # refused under readonly=1 (CH code 164)
+    names: tuple[str, ...]  # the lower-cased name groups
+
+
+#: The statement table: head keyword → the head's forms, tried in order.
+#: Each ``@_statement`` handler of :class:`ChSparkEngine` adds one row.
+_STATEMENTS: dict[str, list[_Statement]] = {}
+
+_NAME_RE = re.compile(r"\{([a-z]\w*)\}")
+
+
+def _statement(head: str, pattern: str, writes: bool = True):
+    """Register the decorated engine method as the handler of the form
+    ``head pattern``.  A space in either stands for ``\\s+`` (``\\x20`` is a
+    literal space); ``{x}`` in *pattern* captures an identifier as group
+    ``x`` and lower-cases it (the table, view, policy and index names).  The
+    anchors are added here."""
+    rx = _NAME_RE.sub(r"(?P<\1>\\w+)", f"{head} {pattern}").replace(" ", r"\s+")
+    compiled = re.compile(f"(?is)^{rx}$")
+    names = tuple(_NAME_RE.findall(pattern))
+
+    def register(fn: Callable[..., DataFrame]) -> Callable[..., DataFrame]:
+        row = _Statement(head, compiled, fn, writes, names)
+        _STATEMENTS.setdefault(head.split()[0], []).append(row)
+        return fn
+
+    return register
+
+
+def match_statement(query: str) -> tuple[_Statement, dict] | None:
+    """The first form of *query*'s head that matches it, with its named
+    groups; None when none does.  A head with no forms (SELECT, WITH, ...)
+    costs one dict miss."""
+    forms = _STATEMENTS.get(statement_head(query))
+    if forms:
+        text = query.strip().rstrip(";").rstrip()
+        for row in forms:
+            m = row.pattern.match(text)
+            if m:
+                groups = m.groupdict()
+                for k in row.names:
+                    groups[k] = groups[k].lower()
+                return row, groups
+    return None
+
+
+def statement_writes(query: str) -> bool:
+    """Whether *query* writes, so readonly=1 refuses it.  A statement that
+    no form matches writes when any form of its head does: a misspelled
+    mutation is refused too."""
+    found = match_statement(query)
+    if found:
+        return found[0].writes
+    return any(row.writes for row in _STATEMENTS.get(statement_head(query), ()))
+
+
+def parse_set(query: str) -> tuple[str, str] | None:
+    """``(name, value)`` of a ``SET name = value`` statement, else None: the
+    one SET parser, shared by the engine and the HTTP session settings."""
+    found = statement_head(query) == "SET" and match_statement(query)
+    if found:
+        return found[1]["name"], found[1]["value"].strip("'")
+    return None
+
+
+#: the tail a bare column-list CREATE TABLE accepts after its columns
+_DDL_TAIL_RE = re.compile(
+    r"(?is)^ENGINE\s*=\s*(?!Kafka\b)\w+(?:\([^)]*\))?"
+    r"(?:\s+PARTITION\s+BY\s+\w+)?(?:\s+ORDER\s+BY\s+[\w,() ]+?)?"
+    r"(?:\s+TTL\s+(.+?))?\s*;?\s*$"
+)
+
+#: a reference to a system view (``system.X``; chsql rewrites it to the
+#: ``system_X`` view) or an information_schema view
+_SYSTEM_REF_RE = re.compile(r"(?i)\b(system|information_schema)[._](\w+)")
+
+
 #: Sessions whose CH-named UDFs are registered: temp functions live as long
 #: as the session, and registering about 20 pandas UDFs takes about 0.2 s.
 _UDF_SESSIONS: set[str] = set()
@@ -111,6 +221,28 @@ class ChSparkEngine:
         self.spark = spark or get_spark("ChSparkEngine")
         self.sf_dir = sf_dir
         self.tables = register_tables(self.spark, sf_dir)
+        #: session settings applied via SET (system.settings' changed rows)
+        self.settings: dict[str, str] = {}
+        self._default_dialect: str | None = None  # SET dialect = '...'
+        self._query_log: list[tuple] = []  # system.query_log rows
+        self._query_cache: dict[tuple[str, str], DataFrame] = {}
+        #: CTAS MergeTree layouts live under this directory, made on first use
+        self._table_dir: str | None = None
+        self._table_partitions: dict[str, tuple] = {}  # PARTITION BY keys
+        self._ttl_exprs: dict[str, str] = {}  # row TTL, applied at OPTIMIZE
+        self._dropped: dict[str, DataFrame] = {}  # parked for UNDROP TABLE
+        self._dropped_ttl: dict[str, str] = {}
+        self._detached: dict[str, DataFrame] = {}  # parked for ATTACH TABLE
+        #: row policy → (table, predicate): predicate strings, not DataFrame
+        #: snapshots, so mutations made while a policy is active persist
+        #: through its drop, and stacked policies compose/drop in any order
+        self._row_policies: dict[str, tuple[str, str]] = {}
+        self._policy_base: dict[str, DataFrame] = {}  # lineage under policies
+        self._param_views: dict[str, str] = {}  # parameterized view bodies
+        #: refreshable materialized view → (interval, body)
+        self._refreshable_views: dict[str, tuple[str, str]] = {}
+        self._indexes: dict[str, tuple[str, str, str]] = {}  # full-text
+        self.streams: dict[str, DataFrame] = {}  # ENGINE = Kafka tables
         self._register_udfs()
 
     def _register_udfs(self) -> None:
@@ -161,22 +293,16 @@ class ChSparkEngine:
         t0 = _time.perf_counter()
         ok = True
         try:
-            head = query.lstrip().split(None, 1)[0].upper() if query.strip() else ""
-            if (
-                getattr(self, "settings", {}).get("use_query_cache")
-                in ("1", "true", "True")
-                and head in ("SELECT", "WITH", "FROM")
-            ):
+            if self.settings.get("use_query_cache") in (
+                "1", "true", "True"
+            ) and statement_head(query) in ("SELECT", "WITH", "FROM"):
                 # query cache (CH `use_query_cache`, 23.x+): SELECT results
                 # keyed by whitespace-normalized text + dialect, persisted so
                 # repeat executions read the in-memory columnar copy
                 key = (dialect, " ".join(query.split()))
-                cache = getattr(self, "_query_cache", None)
-                if cache is None:
-                    cache = self._query_cache = {}
-                if key not in cache:
-                    cache[key] = self._sql_impl(query, dialect).persist()
-                return cache[key]
+                if key not in self._query_cache:
+                    self._query_cache[key] = self._sql_impl(query, dialect).persist()
+                return self._query_cache[key]
             return self._sql_impl(query, dialect)
         except Exception:
             ok = False
@@ -189,15 +315,12 @@ class ChSparkEngine:
     ) -> None:
         import time as _time
 
-        log = getattr(self, "_query_log", None)
-        if log is None:
-            log = self._query_log = []
-        head = query.lstrip().split(None, 1)[0].upper() if query.strip() else ""
+        log = self._query_log
         log.append(
             (
                 len(log) + 1,
                 _time.strftime("%Y-%m-%d %H:%M:%S", _time.gmtime()),
-                head or "EMPTY",
+                statement_head(query) or "EMPTY",
                 query,
                 dialect,
                 round(duration_ms, 3),
@@ -230,7 +353,7 @@ class ChSparkEngine:
             read_rows, peak = _executed_plan_metrics(df)
         except Exception:  # metric walk is best-effort telemetry, never fatal
             read_rows, peak = None, None
-        log = getattr(self, "_query_log", None)
+        log = self._query_log
         if log:
             last = log[-1]
             log[-1] = last[:8] + (read_rows, len(rows), peak)
@@ -245,7 +368,7 @@ class ChSparkEngine:
         executed plan.  Columns follow the CH names: type, event_date,
         event_time, query_kind, query, query_duration_ms, read_rows,
         result_rows, memory_usage plus the engine-specific dialect tag."""
-        rows = list(getattr(self, "_query_log", []))
+        rows = list(self._query_log)
         return local_frame(
             self.spark, rows,
             "query_id bigint, event_time string, query_kind string, "
@@ -261,8 +384,6 @@ class ChSparkEngine:
         Dockerfile:225-230).  Append-mode so periodic flushes accumulate
         like CH's background flush; re-read it with
         ``spark.read.parquet(path)`` or register it over the text path."""
-        from pyspark.sql import functions as F
-
         df = self.system_query_log().withColumn(
             "event_yyyymm",
             F.date_format(F.to_date("event_date"), "yyyyMM").cast("int"),
@@ -272,47 +393,18 @@ class ChSparkEngine:
 
     #: CH session settings with a direct Spark-conf analog; everything else
     #: is accepted and recorded (CH tolerates hundreds of settings — erroring
-    #: would break real ops scripts), queryable via getattr(eng, 'settings')
+    #: would break real ops scripts), queryable via eng.settings
     _SETTING_MAP = {
         "max_threads": "spark.sql.shuffle.partitions",
         "session_timezone": "spark.sql.session.timeZone",
         "timezone": "spark.sql.session.timeZone",
     }
 
-    def _set_statement(self, query: str) -> DataFrame:
-        """``SET name = value`` (the clickhouse-client session-settings
-        surface; the reference image's profiles set these same knobs,
-        Dockerfile:246-252).  ``SET dialect = 'prql'|'clickhouse'`` switches
-        the auto-path default, mirroring upstream's PRQL toggle."""
-        import re as _re
-
-        from clickhouseocp_spark.chsql import ChSqlError
-
-        m = _re.match(
-            r"(?is)^SET\s+(\w+)\s*=\s*('[^']*'|\S+?)\s*;?\s*$", query.strip()
-        )
-        if not m:
-            raise ChSqlError(f"cannot parse SET statement: {query!r}")
-        name, value = m.group(1).lower(), m.group(2).strip().strip("'")
-        if not hasattr(self, "settings"):
-            self.settings: dict[str, str] = {}
-        self.settings[name] = value
-        if name == "dialect":
-            self._default_dialect = value
-        elif name in self._SETTING_MAP:
-            self.spark.conf.set(self._SETTING_MAP[name], value)
-        if getattr(self, "_system_views_done", False):
-            # keep the system.settings view current (changed-flag semantics)
-            self.system_settings().createOrReplaceTempView("system_settings")
-        return local_frame(
-            self.spark, [(name, value)], "setting string, value string"
-        ).limit(0)
-
     def system_metrics(self) -> DataFrame:
         """`system.metrics`-style counters derived from live session state
         (the CH table is a point-in-time gauge set; ours is the subset a
         library engine can honestly report)."""
-        log = getattr(self, "_query_log", [])
+        log = self._query_log
         rows = [
             ("Query", len(log), "statements dispatched through engine.sql"),
             (
@@ -323,12 +415,12 @@ class ChSparkEngine:
             ("TablesRegistered", len(self.tables), "tables in the session catalog"),
             (
                 "QueryCacheEntries",
-                len(getattr(self, "_query_cache", {})),
+                len(self._query_cache),
                 "persisted SELECT results (use_query_cache)",
             ),
             (
                 "SettingsChanged",
-                len(getattr(self, "settings", {})),
+                len(self.settings),
                 "session settings applied via SET",
             ),
         ]
@@ -336,74 +428,15 @@ class ChSparkEngine:
             self.spark, rows, "metric string, value bigint, description string"
         )
 
-    #: the exact SHOW statements (upper-cased, no trailing ``;``)
-    _SHOW = {
-        "SHOW TABLES": lambda self: self.system_tables(),
-        "SHOW DATABASES": lambda self: local_frame(
-            self.spark, [("default",)], "name string"
-        ),
-        # session engine: no concurrent query daemon → always empty, with
-        # the CH column surface so ops scripts parse the result
-        "SHOW PROCESSLIST": lambda self: local_frame(
-            self.spark,
-            [],
-            "query_id string, user string, query string, elapsed double",
-        ),
-    }
-
     def _sql_impl(self, query: str, dialect: str = "auto") -> DataFrame:
-        if dialect == "auto" and getattr(self, "_default_dialect", None):
+        if dialect == "auto" and self._default_dialect:
             dialect = self._default_dialect  # SET dialect = '...'
-        head = query.lstrip().split(None, 1)[0].upper() if query.strip() else ""
-        pviews = getattr(self, "_param_views", None)
-        if pviews and head in ("SELECT", "WITH", "FROM"):
-            from clickhouseocp_spark.chsql import expand_param_views
-
-            query = expand_param_views(query, pviews)
-        if head in ("ALTER", "OPTIMIZE", "TRUNCATE", "CREATE", "INSERT", "DROP",
-                    "RENAME", "EXCHANGE", "DELETE", "SYSTEM", "KILL",
-                    "ATTACH", "DETACH", "UNDROP", "BACKUP", "RESTORE",
-                    "CHECK"):
-            return self.execute(query)
-        if head == "SET":
-            return self._set_statement(query)
-        stmt = query.strip().rstrip(";")
-        if head == "SHOW":
-            show = stmt.upper()
-            if show in self._SHOW:
-                return self._SHOW[show](self)
-            if show.startswith("SHOW CREATE TABLE"):
-                return self.show_create_table(stmt.split()[-1].lower())
-        if head == "EXISTS":
-            t = stmt.split()[-1].lower()
-            return local_frame(
-                self.spark, [(1 if t in self.tables else 0,)], "result int"
-            )
-        if head in ("DESCRIBE", "DESC"):
-            t = stmt.split()[-1].lower()
-            self._table(t)  # raise on unknown, consistent error surface
-            return self.spark.sql(f"DESCRIBE {t}")
-        if head == "EXPLAIN":
-            rest = query.lstrip()[7:].lstrip().rstrip(";")
-            mode = "PIPELINE"
-            first = rest.split(None, 1)[0].upper() if rest else ""
-            if first in ("AST", "SYNTAX", "PLAN", "PIPELINE", "ESTIMATE"):
-                mode = first
-                rest = rest.split(None, 1)[1] if len(rest.split(None, 1)) > 1 else ""
-            if mode == "ESTIMATE":
-                return self.explain_estimate(rest)
-            plan = self.explain(rest, dialect=dialect, mode=mode)
-            return local_frame(
-                self.spark, [(line,) for line in plan.splitlines()], "plan string"
-            )
-        if any(
-            t in query.lower()
-            for t in ("system.", "system_", "information_schema")
-        ):
-            self._ensure_system_views()
-            # the log/metrics grow per call → re-register fresh on every read
-            self.system_query_log().createOrReplaceTempView("system_query_log")
-            self.system_metrics().createOrReplaceTempView("system_metrics")
+        head = statement_head(query)
+        if head in _STATEMENTS:
+            return self.execute(query, dialect)
+        if self._param_views and head in ("SELECT", "WITH", "FROM"):
+            query = expand_param_views(query, self._param_views)
+        self._register_system_views(query)
         if dialect == "prql":
             from clickhouseocp_spark.prql import transpile_prql
 
@@ -439,11 +472,9 @@ class ChSparkEngine:
         ``APPLY fn`` wraps each matched column, producing CH's
         ``fn(col)``-style output names.  Chained APPLY and EXCEPT after
         COLUMNS are out of the subset (documented)."""
-        import re as _re
-
-        if not _re.search(r"(?i)\bCOLUMNS\s*\(", query):
+        if not re.search(r"(?i)\bCOLUMNS\s*\(", query):
             return query
-        mt = _re.search(r"(?is)\bFROM\s+([A-Za-z_]\w*)", query)
+        mt = re.search(r"(?is)\bFROM\s+([A-Za-z_]\w*)", query)
         if not mt:
             return query
         try:
@@ -451,9 +482,9 @@ class ChSparkEngine:
         except Exception:  # noqa: BLE001 — unknown table errors surface later
             return query
 
-        def _expand(m: "_re.Match[str]") -> str:
+        def _expand(m: "re.Match[str]") -> str:
             rx, fn = m.group(1), m.group(2)
-            cols = [c for c in fields if _re.search(rx, c)]
+            cols = [c for c in fields if re.search(rx, c)]
             if not cols:
                 raise ChSqlError(
                     f"COLUMNS({rx!r}) matched no columns of {mt.group(1)}"
@@ -462,7 +493,7 @@ class ChSparkEngine:
                 return ", ".join(f"{fn}({c}) AS `{fn}({c})`" for c in cols)
             return ", ".join(cols)
 
-        return _re.sub(
+        return re.sub(
             r"(?is)\bCOLUMNS\s*\(\s*'([^']+)'\s*\)"
             r"(?:\s+APPLY\s*\(?\s*([A-Za-z_]\w*)\s*\)?)?",
             _expand,
@@ -484,7 +515,6 @@ class ChSparkEngine:
         df = self.spark.sql(core)
         if fill is None:
             return df
-        from pyspark.sql import functions as F
 
         from clickhouseocp_spark.operators.fill import with_fill
 
@@ -515,636 +545,692 @@ class ChSparkEngine:
             staleness=fill.get("staleness") or None,
         )
 
-    def execute(self, statement: str) -> DataFrame:
-        """CH mutation/maintenance statements over the catalog views
-        (SURVEY §2.1 mutations; the reference accepts these over the same
-        SQL transport as SELECTs):
+    def execute(self, statement: str, dialect: str = "auto") -> DataFrame:
+        """Run one statement through the statement table (``_STATEMENTS``,
+        SURVEY §2.1: the reference accepts DDL, mutations and ops statements
+        over the same SQL transport as SELECTs).  Only the forms of the
+        statement's head are tried, in table order; the first that matches
+        runs.  The forms are the ``@_statement`` handlers below: the session
+        reads (``SET``, ``SHOW``, ``EXISTS``, ``DESCRIBE``, ``EXPLAIN`` —
+        ``dialect`` is the one EXPLAIN plans in), DDL (``CREATE``, ``DROP``,
+        ``RENAME``, ``EXCHANGE``, ``ATTACH``/``DETACH``/``UNDROP``),
+        mutations (``INSERT``, ``ALTER TABLE``, ``DELETE``, ``TRUNCATE``,
+        ``OPTIMIZE``) and ops (``SYSTEM``, ``KILL``, ``CHECK``,
+        ``BACKUP``/``RESTORE``).
 
-        - ``CREATE TABLE t [ENGINE = MergeTree] [PARTITION BY col]
-          [ORDER BY cols] AS SELECT ...`` — CTAS materialized in the
-          MergeTree-equivalent parquet layout (partition dirs + sorted row
-          groups) and read back, so later queries prune partitions
-        - ``INSERT INTO t SELECT ...``
-        - ``DROP TABLE [IF EXISTS] t``
-        - ``ALTER TABLE t DELETE WHERE cond``
-        - ``ALTER TABLE t UPDATE col = expr[, ...] WHERE cond``
-        - ``OPTIMIZE TABLE t [FINAL]`` (no-op: every read is already the
-          merged view — FINAL semantics by construction)
-        - ``TRUNCATE TABLE t``
-
-        The mutated lineage replaces the session view (the parquet fixtures
+        A mutation replaces the session view's lineage (the parquet fixtures
         are immutable; persist with sources/writers if needed) — CH's
         mutations are likewise deferred rewrites, not in-place edits.
         Expressions go through the CH-dialect rewriter (chsql.transpile_expr).
         """
-        import re as _re
+        found = match_statement(statement)
+        if found is None:
+            if statement_head(statement) == "SET":
+                raise ChSqlError(f"cannot parse SET statement: {statement!r}")
+            raise _unsupported(statement)
+        row, groups = found
+        if row.head == "EXPLAIN":
+            groups["dialect"] = dialect
+        return row.handler(self, **groups)
 
-        from pyspark.sql import functions as F
+    def _empty(self, column: str, value: str) -> DataFrame:
+        """The zero-row acknowledgement of a DDL or ops statement."""
+        return self.spark.range(0).select(F.lit(value).alias(column))
 
-        from clickhouseocp_spark.chsql import ChSqlError, transpile_expr
-        from clickhouseocp_spark.operators.mutations import delete_where, update_where
+    # The statement table: each ``@_statement`` handler below is one row
+    # (head, pattern, write flag).  The forms of one head are tried in the
+    # order they are written here, so an overlapping form comes first.
 
-        text = statement.strip().rstrip(";")
-        m = _re.match(
-            r"(?is)^CREATE\s+MATERIALIZED\s+VIEW\s+(?:IF\s+NOT\s+EXISTS\s+)?"
-            r"(\w+)\s+REFRESH\s+EVERY\s+(\d+)\s+(\w+)\s+AS\s+(SELECT.+)$",
-            text,
-        )
-        if m:
-            # refreshable MV (CH 23.12): full-recompute on schedule.  The
-            # session engine has no daemon, so the schedule is recorded and
-            # refresh runs on SYSTEM REFRESH VIEW <name> (the CH manual
-            # trigger) or engine.refresh_views() — each recompute replaces
-            # the stored table atomically, exactly CH's
-            # refresh-into-new-table-and-exchange semantics.
-            name, n, unit, body = (
-                m.group(1).lower(), int(m.group(2)), m.group(3), m.group(4)
-            )
-            if not hasattr(self, "_refreshable_views"):
-                self._refreshable_views: dict[str, tuple[str, str]] = {}
-            self._refreshable_views[name] = (f"{n} {unit.upper()}", body)
-            return self._create_table(name, self.sql(body), (), ())
-        m = _re.match(
-            r"(?is)^SYSTEM\s+REFRESH\s+VIEW\s+(\w+)$", text
-        )
-        if m:
-            name = m.group(1).lower()
-            views = getattr(self, "_refreshable_views", {})
-            if name not in views:
-                raise ChSqlError(f"SYSTEM REFRESH VIEW: {name!r} is not a "
-                                 "refreshable materialized view")
-            return self._create_table(name, self.sql(views[name][1]), (), ())
-        m = _re.match(
-            r"(?is)^CREATE\s+WINDOW\s+VIEW\s+(?:IF\s+NOT\s+EXISTS\s+)?"
-            r"(\w+)\s+AS\s+(SELECT.+)$",
-            text,
-        )
-        if m:
-            # WINDOW VIEW (CH 22.x experimental, in the pinned image):
-            # tumble()/hop() group-by windows.  Batch analog — the view
-            # recomputes per read over the current data, exactly like a
-            # plain VIEW whose body uses the window functions; CH's
-            # incremental fire-on-insert/fire-on-watermark machinery is the
-            # Structured-Streaming tier (streaming/pipeline.py tumbling/
-            # hopping queries, driver-recorded).  tumble/hop lower to
-            # Spark's window() struct (chsql._window_tvf_expr).
-            return self._replace_view(m.group(1).lower(), self.sql(m.group(2)))
-        m = _re.match(
-            r"(?is)^CREATE\s+(MATERIALIZED\s+)?VIEW\s+(?:IF\s+NOT\s+EXISTS\s+)?"
-            r"(\w+)\s+AS\s+(SELECT.+)$",
-            text,
-        )
-        if m:
-            name = m.group(2).lower()
-            body = m.group(3)
-            from clickhouseocp_spark.chsql import _PARAM_RE
+    @_statement("SET", r"{name}\s*=\s*(?P<value>'[^']*'|\S+?)", writes=False)
+    def _set_statement(self, name: str, value: str) -> DataFrame:
+        """``SET name = value`` (the clickhouse-client session-settings
+        surface; the reference image's profiles set these same knobs,
+        Dockerfile:246-252).  ``SET dialect = 'prql'|'clickhouse'`` switches
+        the auto-path default, mirroring upstream's PRQL toggle."""
+        value = value.strip("'")
+        self.settings[name] = value
+        if name == "dialect":
+            self._default_dialect = value
+        elif name in self._SETTING_MAP:
+            self.spark.conf.set(self._SETTING_MAP[name], value)
+        return local_frame(
+            self.spark, [(name, value)], "setting string, value string"
+        ).limit(0)
 
-            if not m.group(1) and _PARAM_RE.search(body):
-                # parameterized view (CH 23.1): the body keeps {p:Type}
-                # placeholders and is instantiated per call via
-                # SELECT ... FROM name(p = value)
-                if not hasattr(self, "_param_views"):
-                    self._param_views: dict[str, str] = {}
-                self._param_views[name] = body
-                return self.spark.range(0).select(F.lit(name).alias("view")).limit(0)
-            df = self.sql(body)
-            if m.group(1):
-                # MATERIALIZED: compute once into the MergeTree layout and
-                # read it back (CH MVs store; plain views recompute per read)
-                return self._create_table(name, df, (), ())
-            return self._replace_view(name, df)
-        m = _re.match(
-            r"(?is)^CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?(\w+)\s*"
-            r"(?:\(([^)]*)\)\s*)?ENGINE\s*=\s*Kafka\b(.*)$",
-            text,
+    @_statement("SHOW", "TABLES", writes=False)
+    def _show_tables(self) -> DataFrame:
+        return self.system_tables()
+
+    @_statement("SHOW", "DATABASES", writes=False)
+    def _show_databases(self) -> DataFrame:
+        return local_frame(self.spark, [("default",)], "name string")
+
+    @_statement("SHOW", "PROCESSLIST", writes=False)
+    def _show_processlist(self) -> DataFrame:
+        # session engine: no concurrent query daemon → always empty, with
+        # the CH column surface so ops scripts parse the result
+        return local_frame(
+            self.spark,
+            [],
+            "query_id string, user string, query string, elapsed double",
         )
-        if m:
-            return self._create_kafka_table(
-                m.group(1).lower(), m.group(2) or "", m.group(3) or ""
-            )
-        m = _re.match(
-            r"(?is)^CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?(\w+)\s*\(", text
+
+    @_statement("SHOW", "CREATE TABLE {name}", writes=False)
+    def show_create_table(self, name: str) -> DataFrame:
+        """``SHOW CREATE TABLE t``: synthesize CH-style DDL from the live
+        schema + the table's physical layout (partition dirs of a CTAS
+        MergeTree materialization when present)."""
+        df = self._table(name)
+
+        def ch_type(t: str) -> str:
+            if t.startswith("decimal"):
+                return "Decimal" + t[len("decimal"):]
+            if t.startswith("array<") and t.endswith(">"):
+                return f"Array({ch_type(t[6:-1])})"
+            return self._CH_TYPE_NAMES.get(t, t)
+
+        cols = ",\n    ".join(f"`{c}` {ch_type(t)}" for c, t in df.dtypes)
+        partition = ""
+        if self._table_dir is not None:
+            root = os.path.join(self._table_dir, name)
+            if os.path.isdir(root):
+                keys = {
+                    d.split("=")[0]
+                    for d in os.listdir(root)
+                    if "=" in d and os.path.isdir(os.path.join(root, d))
+                }
+                if keys:
+                    partition = f"\nPARTITION BY ({', '.join(sorted(keys))})"
+        ddl = (
+            f"CREATE TABLE {name}\n(\n    {cols}\n)\n"
+            f"ENGINE = MergeTree{partition}\nORDER BY tuple()"
         )
-        if m:
-            # bare column-list DDL (no AS SELECT): balanced-paren scan (the
-            # column list nests parens: LowCardinality(String), Decimal(p,s))
-            start = m.end() - 1
-            depth, end = 0, -1
-            for i in range(start, len(text)):
-                if text[i] == "(":
-                    depth += 1
-                elif text[i] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        end = i
-                        break
-            tail = text[end + 1 :].strip() if end >= 0 else ""
-            mtail = _re.match(
-                r"(?is)^ENGINE\s*=\s*\w+(?:\([^)]*\))?"
-                r"(?:\s+PARTITION\s+BY\s+\w+)?(?:\s+ORDER\s+BY\s+[\w,() ]+?)?"
-                r"(?:\s+TTL\s+(.+?))?"
-                r"\s*;?\s*$",
-                tail,
-            )
-            if end >= 0 and mtail and not _re.match(
-                r"(?is)^.*ENGINE\s*=\s*Kafka\b", tail
-            ):
-                t = m.group(1).lower()
-                if mtail.group(1):
-                    self._ttl_exprs = getattr(self, "_ttl_exprs", {})
-                    self._ttl_exprs[t] = transpile_expr(mtail.group(1).strip())
-                else:
-                    # re-CREATE without TTL must not inherit a prior
-                    # same-named table's TTL expression
-                    getattr(self, "_ttl_exprs", {}).pop(t, None)
-                fields = []
-                for coldef in _split_assignments(text[start + 1 : end]):
-                    parts = coldef.strip().split(None, 1)
-                    if len(parts) != 2:
-                        raise ChSqlError(f"malformed column definition: {coldef!r}")
-                    fields.append((parts[0], self._spark_type(parts[1].strip())))
-                schema = ", ".join(f"{n} {ty}" for n, ty in fields)
-                empty = local_frame(self.spark, [], schema)
-                self.tables[t] = empty
-                empty.createOrReplaceTempView(t)
-                return local_frame(self.spark, [(t,)], "created string").limit(0)
-        m = _re.match(
-            r"(?is)^CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?(\w+)\s*"
-            r"(?:ENGINE\s*=\s*\w+(?:\(\s*\))?\s*)?"
-            r"(?:PARTITION\s+BY\s+(\w+)\s*)?"
-            r"(?:ORDER\s+BY\s+(?:\(([^)]*)\)|([\w, ]+?))\s*)?"
-            r"(?:TTL\s+(.+?)\s+)?"
-            r"AS\s+(SELECT.+)$",
-            text,
+        return local_frame(self.spark, [(ddl,)], "statement string")
+
+    @_statement("SHOW", "(?P<rest>.+)", writes=False)
+    def _show_spark(self, rest: str) -> DataFrame:
+        # the other SHOW forms (FUNCTIONS, COLUMNS, VIEWS, …) are Spark SQL's
+        return self.spark.sql(f"SHOW {rest}")
+
+    @_statement("EXISTS", r"(?:\w+ )*{t}", writes=False)
+    def _exists(self, t: str) -> DataFrame:
+        return local_frame(
+            self.spark, [(1 if t in self.tables else 0,)], "result int"
         )
-        if m:
-            t = m.group(1).lower()
-            partition = (m.group(2),) if m.group(2) else ()
-            order_txt = m.group(3) or m.group(4) or ""
-            order = tuple(c.strip() for c in order_txt.split(",") if c.strip())
-            if m.group(5):
-                # MergeTree row TTL: stored at DDL time, applied when parts
-                # merge — here at OPTIMIZE (CH's own semantics are lazy: the
-                # expired rows remain readable until a merge runs)
-                self._ttl_exprs = getattr(self, "_ttl_exprs", {})
-                self._ttl_exprs[t] = transpile_expr(m.group(5).strip())
-            else:
-                getattr(self, "_ttl_exprs", {}).pop(t, None)
-            df = self.sql(m.group(6))
-            return self._create_table(t, df, partition, order)
-        m = _re.match(
-            r"(?is)^INSERT\s+INTO\s+(\w+)\s*(?:\(([\w\s,]+)\)\s*)?"
-            r"FORMAT\s+JSONEachRow\s+(.+)$",
-            text,
+
+    @_statement("DESCRIBE", "(?:TABLE )?{t}", writes=False)
+    @_statement("DESC", "(?:TABLE )?{t}", writes=False)
+    def _describe(self, t: str) -> DataFrame:
+        self._table(t)  # raise on unknown, consistent error surface
+        return self.spark.sql(f"DESCRIBE {t}")
+
+    @_statement(
+        "EXPLAIN",
+        r"(?:(?P<mode>AST|SYNTAX|PLAN|PIPELINE|ESTIMATE)\b\s*)?(?P<body>.*)",
+        writes=False,
+    )
+    def _explain_statement(
+        self, mode: str | None, body: str, dialect: str
+    ) -> DataFrame:
+        mode = (mode or "PIPELINE").upper()
+        if mode == "ESTIMATE":
+            return self.explain_estimate(body)
+        plan = self.explain(body, dialect=dialect, mode=mode)
+        return local_frame(
+            self.spark, [(line,) for line in plan.splitlines()], "plan string"
         )
-        if m:
-            # the reference's Kafka/HTTP ingestion format: one JSON object
-            # per line, fields matched by name, absent columns NULL-filled
-            t = m.group(1).lower()
-            target = self._base_table(t)
-            dt = dict(target.dtypes)
-            cols = (
-                [c.strip() for c in m.group(2).split(",")]
-                if m.group(2)
-                else target.columns
-            )
-            lines = [ln.strip() for ln in m.group(3).splitlines() if ln.strip()]
-            js = self.spark.createDataFrame([(ln,) for ln in lines], "js string")
-            schema = ", ".join(f"{c} {dt[c]}" for c in cols)
-            incoming = js.select(F.from_json("js", schema).alias("m")).select("m.*")
-            for c in target.columns:
-                if c not in cols:
-                    incoming = incoming.withColumn(c, F.lit(None).cast(dt[c]))
-            return self._set_lineage(
-                t, target.unionByName(incoming.select(*target.columns))
-            )
-        m = _re.match(
-            r"(?is)^INSERT\s+INTO\s+(\w+)\s*(?:\(([\w\s,]+)\)\s*)?"
-            r"FORMAT\s+(CSV|TSV|TabSeparated)\s+(.+)$",
-            text,
+
+    @_statement(
+        "CREATE",
+        r"MATERIALIZED VIEW (?:IF NOT EXISTS )?{name} "
+        r"REFRESH EVERY (?P<n>\d+) (?P<unit>\w+) AS (?P<body>SELECT.+)",
+    )
+    def _create_refreshable_view(
+        self, name: str, n: str, unit: str, body: str
+    ) -> DataFrame:
+        # refreshable MV (CH 23.12): full-recompute on schedule.  The
+        # session engine has no daemon, so the schedule is recorded and
+        # refresh runs on SYSTEM REFRESH VIEW <name> (the CH manual
+        # trigger) or engine.refresh_views() — each recompute replaces
+        # the stored table atomically, exactly CH's
+        # refresh-into-new-table-and-exchange semantics.
+        self._refreshable_views[name] = (f"{int(n)} {unit.upper()}", body)
+        return self._create_table(name, self.sql(body), (), ())
+
+    @_statement("SYSTEM", "REFRESH VIEW {name}")
+    def _refresh_view(self, name: str) -> DataFrame:
+        if name not in self._refreshable_views:
+            raise ChSqlError(f"SYSTEM REFRESH VIEW: {name!r} is not a "
+                             "refreshable materialized view")
+        body = self._refreshable_views[name][1]
+        return self._create_table(name, self.sql(body), (), ())
+
+    @_statement(
+        "CREATE",
+        r"(?P<kind>MATERIALIZED |WINDOW )?VIEW (?:IF NOT EXISTS )?{name} "
+        r"AS (?P<body>SELECT.+)",
+    )
+    def _create_view(self, kind: str | None, name: str, body: str) -> DataFrame:
+        kind = (kind or "").strip().upper()
+        if not kind and _PARAM_RE.search(body):
+            # parameterized view (CH 23.1): the body keeps {p:Type}
+            # placeholders and is instantiated per call via
+            # SELECT ... FROM name(p = value)
+            self._param_views[name] = body
+            return self._empty("view", name)
+        df = self.sql(body)
+        if kind == "MATERIALIZED":
+            # compute once into the MergeTree layout and read it back (CH
+            # MVs store; plain views recompute per read)
+            return self._create_table(name, df, (), ())
+        # WINDOW VIEW (CH 22.x experimental, in the pinned image):
+        # tumble()/hop() group-by windows.  Batch analog — the view
+        # recomputes per read over the current data, exactly like a plain
+        # VIEW whose body uses the window functions; CH's incremental
+        # fire-on-insert/fire-on-watermark machinery is the
+        # Structured-Streaming tier (streaming/pipeline.py tumbling/hopping
+        # queries).  tumble/hop lower to Spark's window() struct
+        # (chsql._window_tvf_expr).
+        return self._replace_view(name, df)
+
+    @_statement(
+        "CREATE TABLE",
+        r"(?:IF NOT EXISTS )?{name}\s*(?:\((?P<cols>[^)]*)\)\s*)?"
+        r"ENGINE\s*=\s*Kafka\b(?P<tail>.*)",
+    )
+    def _create_kafka_table(
+        self, name: str, cols: str | None, tail: str
+    ) -> DataFrame:
+        """``CREATE TABLE q (...) ENGINE = Kafka SETTINGS kafka_broker_list =
+        '...', kafka_topic_list = '...'`` — the reference's streaming-ingest
+        engine (SURVEY §2.1; typically paired with a materialized view).
+
+        With the spark-sql-kafka connector present this builds the streaming
+        DataFrame (CH virtual columns + the declared schema parsed from the
+        JSONEachRow payload) and registers it under ``self.streams[name]``.
+        Without the jars it raises the ACTIONABLE enable recipe — the exact
+        package coordinate and session config — instead of an opaque
+        DATA_SOURCE_NOT_FOUND at first read."""
+        from clickhouseocp_spark.streaming.pipeline import (
+            kafka_available,
+            kafka_events_stream,
         )
-        if m:
-            # positional delimited ingestion (clickhouse-client's default
-            # INSERT formats); columns map by position onto the column list
-            t = m.group(1).lower()
-            target = self._base_table(t)
-            dt = dict(target.dtypes)
-            cols = (
-                [c.strip() for c in m.group(2).split(",")]
-                if m.group(2)
-                else target.columns
+
+        settings = dict(re.findall(r"(?i)(\w+)\s*=\s*'([^']*)'", tail))
+        brokers = settings.get("kafka_broker_list", "localhost:9092")
+        topic = settings.get("kafka_topic_list", name)
+        if not kafka_available(self.spark):
+            import pyspark
+
+            pkg = f"org.apache.spark:spark-sql-kafka-0-10_2.13:{pyspark.__version__}"
+            raise RuntimeError(
+                f"ENGINE = Kafka needs the Kafka connector on the classpath. "
+                f"Enable it with: spark-submit --packages {pkg}  (or "
+                f'SparkSession.builder.config("spark.jars.packages", "{pkg}")), '
+                f"then re-run this DDL; see README 'Optional format jars'."
             )
-            sep = "," if m.group(3).upper() == "CSV" else "\t"
-            lines = [ln for ln in m.group(4).splitlines() if ln.strip()]
-            raw = self.spark.createDataFrame([(ln,) for ln in lines], "ln string")
-            schema = ", ".join(f"{c} {dt[c]}" for c in cols)
-            incoming = raw.select(
-                F.from_csv("ln", schema, {"sep": sep}).alias("m")
-            ).select("m.*")
-            for c in target.columns:
-                if c not in cols:
-                    incoming = incoming.withColumn(c, F.lit(None).cast(dt[c]))
-            return self._set_lineage(
-                t, target.unionByName(incoming.select(*target.columns))
-            )
-        m = _re.match(
-            r"(?is)^INSERT\s+INTO\s+(\w+)\s*(?:\(([\w\s,]+)\)\s*)?(SELECT.+|VALUES.+)$",
-            text,
+        stream = kafka_events_stream(self.spark, brokers, topic)
+        if cols and cols.strip():
+            fields = []
+            for part in cols.split(","):
+                bits = part.strip().split()
+                if len(bits) >= 2:
+                    fields.append(f"{bits[0]} {_map_type(bits[1])}")
+            stream = stream.select(
+                "*", F.from_json("value", ", ".join(fields)).alias("__row")
+            ).select("_topic", "_partition", "_offset", "_timestamp", "__row.*")
+        self.streams[name] = stream
+        return stream
+
+    @_statement("CREATE TABLE", r"(?:IF NOT EXISTS )?{t}\s*(?P<rest>\(.*)")
+    def _create_empty_table(self, t: str, rest: str) -> DataFrame:
+        """Bare column-list DDL (no AS SELECT): an empty typed table."""
+        # balanced-paren scan (the column list nests parens:
+        # LowCardinality(String), Decimal(p,s))
+        depth, end = 0, -1
+        for i, ch in enumerate(rest):
+            if ch == "(":
+                depth += 1
+            elif ch == ")":
+                depth -= 1
+                if depth == 0:
+                    end = i
+                    break
+        mtail = _DDL_TAIL_RE.match(rest[end + 1 :].strip()) if end >= 0 else None
+        if mtail is None:
+            raise _unsupported(f"CREATE TABLE {t} {rest}")
+        self._set_ttl(t, mtail.group(1))
+        fields = []
+        for coldef in _split_assignments(rest[1:end]):
+            parts = coldef.strip().split(None, 1)
+            if len(parts) != 2:
+                raise ChSqlError(f"malformed column definition: {coldef!r}")
+            fields.append(f"{parts[0]} {self._spark_type(parts[1].strip())}")
+        self._replace_view(t, local_frame(self.spark, [], ", ".join(fields)))
+        return local_frame(self.spark, [(t,)], "created string").limit(0)
+
+    @_statement(
+        "CREATE TABLE",
+        r"(?:IF NOT EXISTS )?{t}\s*(?:ENGINE\s*=\s*\w+(?:\(\s*\))?\s*)?"
+        r"(?:PARTITION BY (?P<partition>\w+)\s*)?"
+        r"(?:ORDER BY (?:\((?P<order>[^)]*)\)|(?P<order_cols>[\w,\x20]+?))\s*)?"
+        r"(?:TTL (?P<ttl>.+?) )?AS (?P<body>SELECT.+)",
+    )
+    def _create_table_as(
+        self, t: str, partition: str | None, order: str | None,
+        order_cols: str | None, ttl: str | None, body: str,
+    ) -> DataFrame:
+        """CTAS ``CREATE TABLE t [ENGINE = MergeTree] [PARTITION BY col]
+        [ORDER BY cols] [TTL expr] AS SELECT ...``, materialized in the
+        MergeTree-equivalent parquet layout (partition dirs + sorted row
+        groups) and read back, so later queries prune partitions."""
+        self._set_ttl(t, ttl)
+        keys = (order or order_cols or "").split(",")
+        return self._create_table(
+            t,
+            self.sql(body),
+            (partition,) if partition else (),
+            tuple(c.strip() for c in keys if c.strip()),
         )
-        if m:
-            t = m.group(1).lower()
-            target = self._base_table(t)
-            cols = (
-                [c.strip() for c in m.group(2).split(",")] if m.group(2) else None
+
+    def _set_ttl(self, t: str, ttl: str | None) -> None:
+        """Record table *t*'s MergeTree row TTL, which merges apply — here
+        OPTIMIZE (CH's own semantics are lazy: the expired rows remain
+        readable until a merge runs).  A re-CREATE without TTL must not
+        inherit a prior same-named table's TTL expression."""
+        if ttl:
+            self._ttl_exprs[t] = transpile_expr(ttl.strip())
+        else:
+            self._ttl_exprs.pop(t, None)
+
+    @_statement("CREATE", r"ROW POLICY {pol} ON {t} USING (?P<cond>.+?)(?: TO \w+)?")
+    def _create_row_policy(self, pol: str, t: str, cond: str) -> DataFrame:
+        base = self._base_table(t)
+        self._row_policies[pol] = (t, transpile_expr(cond))
+        return self._set_lineage(t, base)
+
+    @_statement(
+        "INSERT INTO",
+        r"{t}\s*(?:\((?P<cols>[\w\s,]+)\)\s*)?"
+        r"FORMAT (?P<fmt>JSONEachRow|CSV|TSV|TabSeparated) (?P<data>.+)",
+    )
+    def _insert_text(
+        self, t: str, cols: str | None, fmt: str, data: str
+    ) -> DataFrame:
+        """``INSERT INTO t [(cols)] FORMAT JSONEachRow|CSV|TSV <rows>``:
+        JSONEachRow (the reference's Kafka/HTTP ingestion format) matches
+        fields by name; the delimited formats (clickhouse-client's default
+        INSERT formats) map by position onto the column list."""
+        target = self._base_table(t)
+        dt = dict(target.dtypes)
+        names = _column_list(cols) or target.columns
+        schema = ", ".join(f"{c} {dt[c]}" for c in names)
+        lines = self.spark.createDataFrame(
+            [(ln,) for ln in data.splitlines() if ln.strip()], "ln string"
+        )
+        if fmt.upper() == "JSONEACHROW":
+            row = F.from_json("ln", schema)
+        else:
+            sep = "," if fmt.upper() == "CSV" else "\t"
+            row = F.from_csv("ln", schema, {"sep": sep})
+        incoming = lines.select(row.alias("m")).select("m.*")
+        return self._append(t, target, incoming, names)
+
+    @_statement(
+        "INSERT INTO",
+        r"{t}\s*(?:\((?P<cols>[\w\s,]+)\)\s*)?(?P<body>SELECT.+|VALUES.+)",
+    )
+    def _insert_select(self, t: str, cols: str | None, body: str) -> DataFrame:
+        """``INSERT INTO t [(cols)] SELECT ...|VALUES ...``: positional, like
+        CH, except that a SELECT of exactly the target's columns appends by
+        name."""
+        target = self._base_table(t)
+        if body[:6].upper() == "VALUES":
+            body = self._values_to_select(body)
+        incoming = self.sql(body)
+        names = _column_list(cols)
+        if names is None and set(incoming.columns) == set(target.columns):
+            names = target.columns  # by name
+        else:
+            names = names or (
+                target.columns
+                if len(incoming.columns) == len(target.columns)
+                else None
             )
-            body = m.group(3)
-            if body.upper().startswith("VALUES"):
-                incoming = self.sql(self._values_to_select(body))
-            else:
-                incoming = self.sql(body)
-            if cols is None and set(incoming.columns) == set(target.columns):
-                incoming = incoming.select(*target.columns)  # by name
-            else:
-                names = cols or (
-                    target.columns
-                    if len(incoming.columns) == len(target.columns)
-                    else None
+            if names is None:
+                raise ChSqlError(
+                    f"INSERT arity mismatch: {len(incoming.columns)} values "
+                    f"for {len(target.columns)} columns"
                 )
-                if names is None:
-                    raise ChSqlError(
-                        f"INSERT arity mismatch: {len(incoming.columns)} values "
-                        f"for {len(target.columns)} columns"
-                    )
-                incoming = incoming.toDF(*names)  # CH INSERT is positional
-            if cols:  # explicit column list: absent columns get NULL defaults
-                for c in target.columns:
-                    if c not in cols:
-                        incoming = incoming.withColumn(
-                            c, F.lit(None).cast(dict(target.dtypes)[c])
-                        )
-            incoming = incoming.select(
-                *[
-                    F.col(c).cast(dict(target.dtypes)[c]).alias(c)
-                    for c in target.columns
-                ]
-            )
-            return self._set_lineage(t, target.unionByName(incoming))
-        m = _re.match(r"(?is)^DROP\s+(?:TABLE|VIEW)\s+(?:IF\s+EXISTS\s+)?(\w+)$", text)
-        if m:
-            t = m.group(1).lower()
-            if t in self.tables:
-                # CH keeps dropped tables recoverable until
-                # database_atomic_delay_before_drop_table_sec — park the
-                # lineage so UNDROP TABLE can restore it
-                if not hasattr(self, "_dropped"):
-                    self._dropped = {}
-                self._dropped[t] = self.tables[t]
-                self.spark.catalog.dropTempView(t)
-                del self.tables[t]
-                # TTL is table metadata: it must not survive the drop and
-                # silently apply to a later same-named table — park it
-                # alongside the lineage so UNDROP restores it too
-                ttl = getattr(self, "_ttl_exprs", {}).pop(t, None)
-                if ttl is not None:
-                    if not hasattr(self, "_dropped_ttl"):
-                        self._dropped_ttl = {}
-                    self._dropped_ttl[t] = ttl
-            return self.spark.range(0).select(F.lit(t).alias("dropped")).limit(0)
-        m = _re.match(
-            r"(?is)^BACKUP\s+TABLE\s+(\w+)\s+TO\s+"
-            r"(?:File\s*\(\s*)?'([^']+)'\s*\)?$",
-            text,
-        )
-        if m:
-            # CH 23.x BACKUP TABLE t TO File('path'): a self-contained copy
-            # readable by any engine — here a parquet snapshot of the current
-            # lineage (policies and mutations included, like CH's data dump)
-            t, path = m.group(1).lower(), m.group(2)
-            self._table(t).write.mode("errorifexists").parquet(path)
-            return local_frame(
-                self.spark, [(t, path, "BACKUP_CREATED")],
-                "table string, path string, status string",
-            )
-        m = _re.match(
-            r"(?is)^RESTORE\s+TABLE\s+(\w+)\s+FROM\s+"
-            r"(?:File\s*\(\s*)?'([^']+)'\s*\)?$",
-            text,
-        )
-        if m:
-            t, path = m.group(1).lower(), m.group(2)
-            import os
+            incoming = incoming.toDF(*names)
+        return self._append(t, target, incoming, names)
 
-            if not os.path.isdir(path):
-                raise ChSqlError(f"RESTORE TABLE: no backup at {path!r}")
-            return self._set_lineage(t, self.spark.read.parquet(path))
-        m = _re.match(r"(?is)^UNDROP\s+TABLE\s+(\w+)$", text)
-        if m:
-            t = m.group(1).lower()
-            parked = getattr(self, "_dropped", {}).pop(t, None)
-            if parked is None:
-                raise ChSqlError(f"UNDROP TABLE: no recoverable table {t!r}")
-            ttl = getattr(self, "_dropped_ttl", {}).pop(t, None)
-            if ttl is not None:
-                self._ttl_exprs = getattr(self, "_ttl_exprs", {})
-                self._ttl_exprs[t] = ttl
-            return self._set_lineage(t, parked)
-        m = _re.match(
-            r"(?is)^ALTER\s+TABLE\s+(\w+)\s+(DROP|DETACH|ATTACH)\s+PARTITION\s+"
-            r"('[^']*'|\S+)$",
-            text,
-        )
-        if m:
-            return self._alter_partition(
-                m.group(1).lower(), m.group(2).upper(), m.group(3).strip("'")
-            )
-        m = _re.match(
-            r"(?is)^ALTER\s+TABLE\s+(\w+)\s+FREEZE(?:\s+WITH\s+NAME\s+'(\w+)')?$",
-            text,
-        )
-        if m:
-            return self._freeze_table(m.group(1).lower(), m.group(2) or "default")
-        m = _re.match(
-            r"(?is)^ALTER\s+TABLE\s+(\w+)\s+ADD\s+COLUMN\s+(?:IF\s+NOT\s+EXISTS\s+)?"
-            r"(\w+)\s+([\w()0-9, ]+?)(?:\s+DEFAULT\s+(.+))?$",
-            text,
-        )
-        if m:
-            t, col, ch_type = m.group(1).lower(), m.group(2), m.group(3).strip()
-            from clickhouseocp_spark.chsql import _map_type
+    @_statement("DROP", r"ROW POLICY {pol}(?: ON \w+)?")
+    def _drop_row_policy(self, pol: str) -> DataFrame:
+        if pol not in self._row_policies:
+            raise ChSqlError(f"unknown row policy {pol!r}")
+        t, _cond = self._row_policies.pop(pol)
+        return self._set_lineage(t, self._base_table(t))
 
-            spark_type = _map_type(ch_type)
-            default = (
-                F.expr(transpile_expr(m.group(4))) if m.group(4) else F.lit(None)
-            )
-            out = self._base_table(t).withColumn(col, default.cast(spark_type))
-            return self._set_lineage(t, out)
-        m = _re.match(
-            r"(?is)^ALTER\s+TABLE\s+(\w+)\s+ADD\s+INDEX\s+(?:IF\s+NOT\s+EXISTS\s+)?"
-            r"(\w+)\s*\(?\s*(\w+)\s*\)?\s+TYPE\s+(full_text|gin|inverted|tokenbf_v1)"
-            r".*$",
-            text,
-        )
-        if m:
-            # CH experimental full-text index (25.x `full_text`, ex-`inverted`;
-            # tokenbf_v1 is the bloom variant): the Spark-native index is a
-            # postings TABLE — build it now, register it as <table>__idx_<name>
-            # so text queries can consult it (SELECT doc ids FROM the postings
-            # WHERE token = ...), bucket-keyed for partition pruning when
-            # persisted (operators/fulltext.py).
-            from clickhouseocp_spark.operators.fulltext import build_fulltext_index
-
-            t, iname, col = m.group(1).lower(), m.group(2).lower(), m.group(3)
-            base = self._base_table(t)
-            if col not in base.columns:
-                raise ChSqlError(f"ADD INDEX: no column {col!r} in {t!r}")
-            id_col = base.columns[0]  # CH indexes rows; the first column keys
-            postings = build_fulltext_index(base, text_col=col, id_col=id_col)
-            if not hasattr(self, "_indexes"):
-                self._indexes: dict[str, tuple[str, str, str]] = {}
-            self._indexes[f"{t}.{iname}"] = (t, col, m.group(4).lower())
-            return self._replace_view(f"{t}__idx_{iname}", postings)
-        m = _re.match(
-            r"(?is)^ALTER\s+TABLE\s+(\w+)\s+(?:DROP|CLEAR)\s+INDEX\s+"
-            r"(?:IF\s+EXISTS\s+)?(\w+)$",
-            text,
-        )
-        if m:
-            t, iname = m.group(1).lower(), m.group(2).lower()
-            getattr(self, "_indexes", {}).pop(f"{t}.{iname}", None)
-            self.tables.pop(f"{t}__idx_{iname}", None)
-            return self.spark.range(0).select(F.lit("ok").alias("ok")).limit(0)
-        m = _re.match(
-            r"(?is)^ALTER\s+TABLE\s+(\w+)\s+MATERIALIZE\s+INDEX\s+(\w+)$", text
-        )
-        if m:
-            # session postings views are always current — accepted no-op
-            return self.spark.range(0).select(F.lit("ok").alias("ok")).limit(0)
-        m = _re.match(r"(?is)^ALTER\s+TABLE\s+(\w+)\s+DROP\s+COLUMN\s+(?:IF\s+EXISTS\s+)?(\w+)$", text)
-        if m:
-            t, col = m.group(1).lower(), m.group(2)
-            return self._set_lineage(t, self._base_table(t).drop(col))
-        m = _re.match(
-            r"(?is)^ALTER\s+TABLE\s+(\w+)\s+RENAME\s+COLUMN\s+"
-            r"(?:IF\s+EXISTS\s+)?(\w+)\s+TO\s+(\w+)$",
-            text,
-        )
-        if m:
-            t, old, new = m.group(1).lower(), m.group(2), m.group(3)
-            return self._set_lineage(
-                t, self._base_table(t).withColumnRenamed(old, new)
-            )
-        m = _re.match(
-            r"(?is)^ALTER\s+TABLE\s+(\w+)\s+CLEAR\s+COLUMN\s+"
-            r"(?:IF\s+EXISTS\s+)?(\w+)(?:\s+IN\s+PARTITION\s+\S+)?$",
-            text,
-        )
-        if m:
-            # CH resets the column to its type default; a partition clause
-            # narrows to one partition — the session view has no per-part
-            # files, so the reset applies table-wide (documented deviation)
-            t, col = m.group(1).lower(), m.group(2)
-            base = self._base_table(t)
-            dt = dict(base.dtypes).get(col)
-            if dt is None:
-                raise ChSqlError(f"CLEAR COLUMN: no column {col!r} on {t!r}")
-            # CH type defaults: epoch date/timestamp, empty string/array/
-            # map/binary, zero numerics; structs (CH tuples) default
-            # field-wise — approximated as NULL (documented deviation)
-            if dt == "string":
-                zero = F.lit("")
-            elif dt == "binary":
-                zero = F.lit(b"")
-            elif dt.startswith(("timestamp", "date")):
-                zero = F.lit("1970-01-01 00:00:00")
-            elif dt.startswith("array"):
-                zero = F.expr(f"CAST(array() AS {dt})")
-            elif dt.startswith("map"):
-                zero = F.expr(f"CAST(map() AS {dt})")
-            elif dt.startswith("struct"):
-                zero = F.lit(None)
-            else:
-                zero = F.lit(0)
-            return self._set_lineage(t, base.withColumn(col, zero.cast(dt)))
-        m = _re.match(
-            r"(?is)^ALTER\s+TABLE\s+(\w+)\s+COMMENT\s+COLUMN\s+"
-            r"(?:IF\s+EXISTS\s+)?(\w+)\s+'[^']*'$",
-            text,
-        )
-        if m:
-            # metadata-only in CH; the session catalog keeps no comments —
-            # accepted no-op so migration scripts run unmodified
-            self._table(m.group(1).lower())  # raise on unknown table
-            return self.spark.range(0).select(F.lit("ok").alias("ok")).limit(0)
-        m = _re.match(
-            r"(?is)^ALTER\s+TABLE\s+(\w+)\s+MATERIALIZE\s+COLUMN\s+"
-            r"(\w+)(?:\s+IN\s+PARTITION\s+\S+)?$",
-            text,
-        )
-        if m:
-            # CH forces computing a DEFAULT/MATERIALIZED column into old
-            # parts; this engine's ALTERs are lineage rewrites, so every
-            # column is computed at read already — accepted no-op with the
-            # column-existence check (the part of the contract that can
-            # fail)
-            t, col = m.group(1).lower(), m.group(2)
-            if col not in self._base_table(t).columns:
-                raise ChSqlError(f"MATERIALIZE COLUMN: no column {col!r} on {t!r}")
-            return self.spark.range(0).select(F.lit("ok").alias("ok")).limit(0)
-        m = _re.match(r"(?is)^CHECK\s+TABLE\s+(\w+)$", text)
-        if m:
-            # CH verifies part checksums and returns one row (result=1) —
-            # the session-view analog verifies the lineage evaluates end to
-            # end (a count() forces a full scan of every referenced file)
-            t = m.group(1).lower()
-            n = self._table(t).count()
-            return self.spark.sql(
-                f"SELECT CAST(1 AS TINYINT) AS result, "
-                f"CAST({n} AS BIGINT) AS rows_read"
-            )
-        m = _re.match(
-            r"(?is)^ALTER\s+TABLE\s+(\w+)\s+MODIFY\s+COLUMN\s+(\w+)\s+([\w()0-9, ]+)$",
-            text,
-        )
-        if m:
-            t, col, ch_type = m.group(1).lower(), m.group(2), m.group(3).strip()
-            from clickhouseocp_spark.chsql import _map_type
-
-            out = self._base_table(t).withColumn(col, F.col(col).cast(_map_type(ch_type)))
-            return self._set_lineage(t, out)
-        m = _re.match(r"(?is)^DELETE\s+FROM\s+(\w+)\s+WHERE\s+(.+)$", text)
-        if m:
-            # lightweight-delete syntax (CH 22.8+): same deferred rewrite as
-            # ALTER TABLE ... DELETE
-            t, cond = m.group(1).lower(), transpile_expr(m.group(2))
-            return self._set_lineage(
-                t, delete_where(self._base_table(t), F.expr(cond))
-            )
-        m = _re.match(r"(?is)^(?:SYSTEM|KILL)\s+\w+.*$", text)
-        if m:
-            # ops statements (SYSTEM FLUSH LOGS / RELOAD DICTIONARIES / KILL
-            # QUERY ...): session views have no daemon state — accepted no-ops
-            # so CH ops scripts run unmodified
-            return self.spark.range(0).select(F.lit(text.split()[0]).alias("ok")).limit(0)
-        m = _re.match(r"(?is)^ALTER\s+TABLE\s+(\w+)\s+DELETE\s+WHERE\s+(.+)$", text)
-        if m:
-            t, cond = m.group(1).lower(), transpile_expr(m.group(2))
-            out = delete_where(self._base_table(t), F.expr(cond))
-            return self._set_lineage(t, out)
-        m = _re.match(
-            r"(?is)^ALTER\s+TABLE\s+(\w+)\s+UPDATE\s+(.+?)\s+WHERE\s+(.+)$", text
-        )
-        if m:
-            t, cond = m.group(1).lower(), transpile_expr(m.group(3))
-            assignments = {}
-            for part in _split_assignments(m.group(2)):
-                col, _, expr = part.partition("=")
-                if not _:
-                    raise ChSqlError(f"malformed UPDATE assignment: {part!r}")
-                assignments[col.strip()] = F.expr(transpile_expr(expr))
-            out = update_where(self._base_table(t), F.expr(cond), assignments)
-            return self._set_lineage(t, out)
-        m = _re.match(
-            r"(?is)^OPTIMIZE\s+TABLE\s+(\w+)(\s+FINAL)?(\s+DEDUPLICATE)?$", text
-        )
-        if m:
-            t = m.group(1).lower()
-            ttl = getattr(self, "_ttl_exprs", {}).get(t)
-            if m.group(3):
-                # OPTIMIZE ... DEDUPLICATE: drop fully-identical rows (CH
-                # semantics: all columns equal), keeping one.  Merges always
-                # apply row TTL, deduplicating merges included.
-                out = self._base_table(t)
-                if ttl:
-                    out = out.where(F.expr(ttl) > F.current_timestamp())
-                return self._set_lineage(t, out.distinct())
-            if ttl:
-                # merges apply row TTL: keep rows whose TTL timestamp is
-                # still in the future (expired rows were readable until now
-                # — CH's lazy TTL contract)
-                return self._set_lineage(
-                    t,
-                    self._base_table(t).where(
-                        F.expr(ttl) > F.current_timestamp()
-                    ),
-                )
-            return self._table(t)
-        m = _re.match(
-            r"(?is)^CREATE\s+ROW\s+POLICY\s+(\w+)\s+ON\s+(\w+)\s+USING\s+(.+?)"
-            r"(?:\s+TO\s+\w+)?$",
-            text,
-        )
-        if m:
-            pol, t, cond = m.group(1).lower(), m.group(2).lower(), m.group(3)
-            base = self._base_table(t)
-            if not hasattr(self, "_row_policies"):
-                # predicate strings, not DataFrame snapshots: mutations made
-                # while a policy is active persist through its drop, and
-                # stacked policies compose/drop in any order
-                self._row_policies: dict[str, tuple[str, str]] = {}
-                self._policy_base: dict[str, DataFrame] = {}
-            self._row_policies[pol] = (t, transpile_expr(cond))
-            return self._set_lineage(t, base)
-        m = _re.match(r"(?is)^DROP\s+ROW\s+POLICY\s+(\w+)(?:\s+ON\s+\w+)?$", text)
-        if m:
-            pol = m.group(1).lower()
-            policies = getattr(self, "_row_policies", {})
-            if pol not in policies:
-                raise ChSqlError(f"unknown row policy {pol!r}")
-            t, _cond = policies.pop(pol)
-            return self._set_lineage(t, self._base_table(t))
-        m = _re.match(r"(?is)^RENAME\s+TABLE\s+(\w+)\s+TO\s+(\w+)$", text)
-        if m:
-            old, new = m.group(1).lower(), m.group(2).lower()
-            df = self._table(old)
-            if new in self.tables:
-                raise ChSqlError(f"RENAME target already exists: {new}")
-            self.spark.catalog.dropTempView(old)
-            del self.tables[old]
-            return self._replace_view(new, df)
-        m = _re.match(r"(?is)^EXCHANGE\s+TABLES\s+(\w+)\s+AND\s+(\w+)$", text)
-        if m:
-            a, b = m.group(1).lower(), m.group(2).lower()
-            da, db = self._table(a), self._table(b)
-            self._replace_view(a, db)
-            return self._replace_view(b, da)
-        m = _re.match(r"(?is)^TRUNCATE\s+TABLE\s+(\w+)$", text)
-        if m:
-            t = m.group(1).lower()
-            return self._set_lineage(t, self._base_table(t).limit(0))
-        m = _re.match(r"(?is)^DETACH\s+TABLE\s+(\w+)$", text)
-        if m:
-            # CH DETACH: table leaves the catalog but its data survives for a
-            # later ATTACH (session analog: park the lineage aside)
-            t = m.group(1).lower()
-            df = self._table(t)
-            if not hasattr(self, "_detached"):
-                self._detached: dict[str, DataFrame] = {}
-            self._detached[t] = df
+    @_statement("DROP", r"(?:TABLE|VIEW) (?P<if_exists>IF EXISTS )?{t}")
+    def _drop_table(self, if_exists: str | None, t: str) -> DataFrame:
+        """``DROP TABLE|VIEW [IF EXISTS] t``.  Without IF EXISTS an unknown
+        name raises the unknown-table error, as TRUNCATE does."""
+        if t in self._param_views:
+            del self._param_views[t]
+        elif t in self.tables:
+            # CH keeps dropped tables recoverable until
+            # database_atomic_delay_before_drop_table_sec — park the
+            # lineage so UNDROP TABLE can restore it
+            self._dropped[t] = self.tables.pop(t)
             self.spark.catalog.dropTempView(t)
-            del self.tables[t]
-            return self.spark.range(0).select(F.lit(t).alias("detached")).limit(0)
-        m = _re.match(r"(?is)^ATTACH\s+TABLE\s+(\w+)$", text)
-        if m:
-            t = m.group(1).lower()
-            parked = getattr(self, "_detached", {})
-            if t not in parked:
-                raise ChSqlError(f"ATTACH TABLE: no detached table {t!r}")
-            return self._replace_view(t, parked.pop(t))
-        raise ChSqlError(f"unsupported statement: {text[:80]!r}")
+            # TTL is table metadata: it must not survive the drop and
+            # silently apply to a later same-named table — park it
+            # alongside the lineage so UNDROP restores it too
+            if t in self._ttl_exprs:
+                self._dropped_ttl[t] = self._ttl_exprs.pop(t)
+        elif not if_exists:
+            self._table(t)  # raises the unknown-table KeyError
+        return self._empty("dropped", t)
+
+    @_statement("BACKUP TABLE", r"{t} TO (?:File\s*\(\s*)?'(?P<path>[^']+)'\s*\)?")
+    def _backup_table(self, t: str, path: str) -> DataFrame:
+        # CH 23.x BACKUP TABLE t TO File('path'): a self-contained copy
+        # readable by any engine — here a parquet snapshot of the current
+        # lineage (policies and mutations included, like CH's data dump)
+        self._table(t).write.mode("errorifexists").parquet(path)
+        return local_frame(
+            self.spark, [(t, path, "BACKUP_CREATED")],
+            "table string, path string, status string",
+        )
+
+    @_statement("RESTORE TABLE", r"{t} FROM (?:File\s*\(\s*)?'(?P<path>[^']+)'\s*\)?")
+    def _restore_table(self, t: str, path: str) -> DataFrame:
+        if not os.path.isdir(path):
+            raise ChSqlError(f"RESTORE TABLE: no backup at {path!r}")
+        return self._set_lineage(t, self.spark.read.parquet(path))
+
+    @_statement("UNDROP TABLE", "{t}")
+    def _undrop_table(self, t: str) -> DataFrame:
+        parked = self._dropped.pop(t, None)
+        if parked is None:
+            raise ChSqlError(f"UNDROP TABLE: no recoverable table {t!r}")
+        if t in self._dropped_ttl:
+            self._ttl_exprs[t] = self._dropped_ttl.pop(t)
+        return self._set_lineage(t, parked)
+
+    @_statement(
+        "ALTER TABLE",
+        r"{t} (?P<action>DROP|DETACH|ATTACH) PARTITION (?P<value>'[^']*'|\S+)",
+    )
+    def _alter_partition(self, t: str, action: str, value: str) -> DataFrame:
+        """``ALTER TABLE t DROP|DETACH|ATTACH PARTITION v`` over the layout's
+        partition directories — the MergeTree partition-lifecycle surface
+        (detached parts live next to the layout, exactly CH's detached/)."""
+        import shutil
+
+        action, value = action.upper(), value.strip("'")
+        path = self._layout_path(t)
+        parts = self._table_partitions.get(t) or ()
+        if not parts:
+            raise ChSqlError(
+                f"table {t!r} was not created with PARTITION BY — "
+                "no partitions to alter"
+            )
+        pdir = os.path.join(path, f"{parts[0]}={value}")
+        ddir = os.path.join(
+            os.path.dirname(path), f"detached_{t}", f"{parts[0]}={value}"
+        )
+        if action == "DROP":
+            if not os.path.isdir(pdir):
+                raise ChSqlError(f"no partition {value!r} in table {t!r}")
+            shutil.rmtree(pdir)
+        elif action == "DETACH":
+            if not os.path.isdir(pdir):
+                raise ChSqlError(f"no partition {value!r} in table {t!r}")
+            os.makedirs(os.path.dirname(ddir), exist_ok=True)
+            shutil.move(pdir, ddir)
+        elif action == "ATTACH":
+            if not os.path.isdir(ddir):
+                raise ChSqlError(
+                    f"no detached partition {value!r} for table {t!r}"
+                )
+            shutil.move(ddir, pdir)
+        return self._reread_layout(t)
+
+    @_statement("ALTER TABLE", r"{t} FREEZE(?: WITH NAME '(?P<backup>\w+)')?")
+    def _freeze_table(self, t: str, backup: str | None) -> DataFrame:
+        """``ALTER TABLE t FREEZE [WITH NAME 'x']``: hard-link-free snapshot
+        of the layout into shadow/<backup>/<table> (CH freezes parts into
+        shadow/); returns the backup path."""
+        import shutil
+
+        path = self._layout_path(t)
+        shadow = os.path.join(os.path.dirname(path), "shadow", backup or "default", t)
+        if os.path.isdir(shadow):
+            shutil.rmtree(shadow)
+        shutil.copytree(path, shadow)
+        return self.spark.range(1).select(
+            F.lit(shadow).alias("backup_path"), F.lit(t).alias("table")
+        )
+
+    @_statement(
+        "ALTER TABLE",
+        r"{t} ADD COLUMN (?:IF NOT EXISTS )?(?P<col>\w+) "
+        r"(?P<ch_type>[\w()0-9,\x20]+?)(?: DEFAULT (?P<default>.+))?",
+    )
+    def _add_column(
+        self, t: str, col: str, ch_type: str, default: str | None
+    ) -> DataFrame:
+        value = F.expr(transpile_expr(default)) if default else F.lit(None)
+        out = self._base_table(t).withColumn(
+            col, value.cast(_map_type(ch_type.strip()))
+        )
+        return self._set_lineage(t, out)
+
+    @_statement(
+        "ALTER TABLE",
+        r"{t} ADD INDEX (?:IF NOT EXISTS )?{idx}\s*\(?\s*(?P<col>\w+)\s*\)? "
+        r"TYPE (?P<kind>full_text|gin|inverted|tokenbf_v1).*",
+    )
+    def _add_index(self, t: str, idx: str, col: str, kind: str) -> DataFrame:
+        # CH experimental full-text index (25.x `full_text`, ex-`inverted`;
+        # tokenbf_v1 is the bloom variant): the Spark-native index is a
+        # postings TABLE — build it now, register it as <table>__idx_<name>
+        # so text queries can consult it (SELECT doc ids FROM the postings
+        # WHERE token = ...), bucket-keyed for partition pruning when
+        # persisted (operators/fulltext.py).
+        from clickhouseocp_spark.operators.fulltext import build_fulltext_index
+
+        base = self._base_table(t)
+        if col not in base.columns:
+            raise ChSqlError(f"ADD INDEX: no column {col!r} in {t!r}")
+        id_col = base.columns[0]  # CH indexes rows; the first column keys
+        postings = build_fulltext_index(base, text_col=col, id_col=id_col)
+        self._indexes[f"{t}.{idx}"] = (t, col, kind.lower())
+        return self._replace_view(f"{t}__idx_{idx}", postings)
+
+    @_statement("ALTER TABLE", r"{t} (?:DROP|CLEAR) INDEX (?:IF EXISTS )?{idx}")
+    def _drop_index(self, t: str, idx: str) -> DataFrame:
+        self._indexes.pop(f"{t}.{idx}", None)
+        if self.tables.pop(f"{t}__idx_{idx}", None) is not None:
+            self.spark.catalog.dropTempView(f"{t}__idx_{idx}")
+        return self._empty("ok", "ok")
+
+    # accepted no-ops, so CH ops scripts run unmodified: session postings
+    # views are always current (MATERIALIZE INDEX), and session views have
+    # no daemon state (SYSTEM FLUSH LOGS / RELOAD DICTIONARIES / KILL QUERY)
+    @_statement("ALTER TABLE", r"\w+ MATERIALIZE INDEX \w+")
+    @_statement("SYSTEM", r"\w+.*", writes=False)
+    @_statement("KILL", r"\w+.*", writes=False)
+    def _acknowledge(self) -> DataFrame:
+        return self._empty("ok", "ok")
+
+    @_statement("ALTER TABLE", r"{t} DROP COLUMN (?:IF EXISTS )?(?P<col>\w+)")
+    def _drop_column(self, t: str, col: str) -> DataFrame:
+        return self._set_lineage(t, self._base_table(t).drop(col))
+
+    @_statement(
+        "ALTER TABLE",
+        r"{t} RENAME COLUMN (?:IF EXISTS )?(?P<old>\w+) TO (?P<new>\w+)",
+    )
+    def _rename_column(self, t: str, old: str, new: str) -> DataFrame:
+        return self._set_lineage(
+            t, self._base_table(t).withColumnRenamed(old, new)
+        )
+
+    @_statement(
+        "ALTER TABLE",
+        r"{t} CLEAR COLUMN (?:IF EXISTS )?(?P<col>\w+)(?: IN PARTITION \S+)?",
+    )
+    def _clear_column(self, t: str, col: str) -> DataFrame:
+        # CH resets the column to its type default; a partition clause
+        # narrows to one partition — the session view has no per-part
+        # files, so the reset applies table-wide (documented deviation)
+        base = self._base_table(t)
+        dt = dict(base.dtypes).get(col)
+        if dt is None:
+            raise ChSqlError(f"CLEAR COLUMN: no column {col!r} on {t!r}")
+        # CH type defaults: epoch date/timestamp, empty string/array/
+        # map/binary, zero numerics; structs (CH tuples) default
+        # field-wise — approximated as NULL (documented deviation)
+        if dt == "string":
+            zero = F.lit("")
+        elif dt == "binary":
+            zero = F.lit(b"")
+        elif dt.startswith(("timestamp", "date")):
+            zero = F.lit("1970-01-01 00:00:00")
+        elif dt.startswith("array"):
+            zero = F.expr(f"CAST(array() AS {dt})")
+        elif dt.startswith("map"):
+            zero = F.expr(f"CAST(map() AS {dt})")
+        elif dt.startswith("struct"):
+            zero = F.lit(None)
+        else:
+            zero = F.lit(0)
+        return self._set_lineage(t, base.withColumn(col, zero.cast(dt)))
+
+    @_statement("ALTER TABLE", r"{t} COMMENT COLUMN (?:IF EXISTS )?\w+ '[^']*'")
+    def _comment_column(self, t: str) -> DataFrame:
+        # metadata-only in CH; the session catalog keeps no comments —
+        # accepted no-op so migration scripts run unmodified
+        self._table(t)  # raise on unknown table
+        return self._empty("ok", "ok")
+
+    @_statement(
+        "ALTER TABLE",
+        r"{t} MATERIALIZE COLUMN (?P<col>\w+)(?: IN PARTITION \S+)?",
+    )
+    def _materialize_column(self, t: str, col: str) -> DataFrame:
+        # CH forces computing a DEFAULT/MATERIALIZED column into old
+        # parts; this engine's ALTERs are lineage rewrites, so every
+        # column is computed at read already — accepted no-op with the
+        # column-existence check (the part of the contract that can fail)
+        if col not in self._base_table(t).columns:
+            raise ChSqlError(f"MATERIALIZE COLUMN: no column {col!r} on {t!r}")
+        return self._empty("ok", "ok")
+
+    @_statement(
+        "ALTER TABLE", r"{t} MODIFY COLUMN (?P<col>\w+) (?P<ch_type>[\w()0-9,\x20]+)"
+    )
+    def _modify_column(self, t: str, col: str, ch_type: str) -> DataFrame:
+        out = self._base_table(t).withColumn(
+            col, F.col(col).cast(_map_type(ch_type.strip()))
+        )
+        return self._set_lineage(t, out)
+
+    @_statement("ALTER TABLE", r"{t} DELETE WHERE (?P<cond>.+)")
+    @_statement("DELETE FROM", r"{t} WHERE (?P<cond>.+)")
+    def _delete_where(self, t: str, cond: str) -> DataFrame:
+        """``ALTER TABLE t DELETE WHERE cond`` and its lightweight-delete
+        syntax (CH 22.8+) ``DELETE FROM t WHERE cond``: one deferred
+        rewrite."""
+        from clickhouseocp_spark.operators.mutations import delete_where
+
+        out = delete_where(self._base_table(t), F.expr(transpile_expr(cond)))
+        return self._set_lineage(t, out)
+
+    @_statement("ALTER TABLE", r"{t} UPDATE (?P<assignments>.+?) WHERE (?P<cond>.+)")
+    def _update_where(self, t: str, assignments: str, cond: str) -> DataFrame:
+        from clickhouseocp_spark.operators.mutations import update_where
+
+        values = {}
+        for part in _split_assignments(assignments):
+            col, eq, expr = part.partition("=")
+            if not eq:
+                raise ChSqlError(f"malformed UPDATE assignment: {part!r}")
+            values[col.strip()] = F.expr(transpile_expr(expr))
+        out = update_where(
+            self._base_table(t), F.expr(transpile_expr(cond)), values
+        )
+        return self._set_lineage(t, out)
+
+    @_statement("CHECK TABLE", "{t}", writes=False)
+    def _check_table(self, t: str) -> DataFrame:
+        # CH verifies part checksums and returns one row (result=1) — the
+        # session-view analog verifies the lineage evaluates end to end (a
+        # count() forces a full scan of every referenced file)
+        n = self._table(t).count()
+        return self.spark.sql(
+            f"SELECT CAST(1 AS TINYINT) AS result, "
+            f"CAST({n} AS BIGINT) AS rows_read"
+        )
+
+    @_statement("OPTIMIZE TABLE", r"{t}(?: FINAL)?(?P<dedup> DEDUPLICATE)?")
+    def _optimize_table(self, t: str, dedup: str | None) -> DataFrame:
+        """``OPTIMIZE TABLE t [FINAL] [DEDUPLICATE]``: every read is already
+        the merged view (FINAL semantics by construction), so a merge only
+        applies the row TTL (keeping rows whose TTL timestamp is still in
+        the future; expired rows were readable until now — CH's lazy TTL
+        contract) and, with DEDUPLICATE, drops fully-identical rows."""
+        ttl = self._ttl_exprs.get(t)
+        if not (ttl or dedup):
+            return self._table(t)
+        out = self._base_table(t)
+        if ttl:
+            out = out.where(F.expr(ttl) > F.current_timestamp())
+        return self._set_lineage(t, out.distinct() if dedup else out)
+
+    @_statement("RENAME TABLE", "{t} TO {t2}")
+    def _rename_table(self, t: str, t2: str) -> DataFrame:
+        df = self._table(t)
+        if t2 in self.tables:
+            raise ChSqlError(f"RENAME target already exists: {t2}")
+        self.spark.catalog.dropTempView(t)
+        del self.tables[t]
+        return self._replace_view(t2, df)
+
+    @_statement("EXCHANGE TABLES", "{t} AND {t2}")
+    def _exchange_tables(self, t: str, t2: str) -> DataFrame:
+        da, db = self._table(t), self._table(t2)
+        self._replace_view(t, db)
+        return self._replace_view(t2, da)
+
+    @_statement("TRUNCATE TABLE", "{t}")
+    def _truncate_table(self, t: str) -> DataFrame:
+        return self._set_lineage(t, self._base_table(t).limit(0))
+
+    @_statement("DETACH TABLE", "{t}")
+    def _detach_table(self, t: str) -> DataFrame:
+        # CH DETACH: table leaves the catalog but its data survives for a
+        # later ATTACH (session analog: park the lineage aside)
+        self._detached[t] = self._table(t)
+        self.spark.catalog.dropTempView(t)
+        del self.tables[t]
+        return self._empty("detached", t)
+
+    @_statement("ATTACH TABLE", "{t}")
+    def _attach_table(self, t: str) -> DataFrame:
+        if t not in self._detached:
+            raise ChSqlError(f"ATTACH TABLE: no detached table {t!r}")
+        return self._replace_view(t, self._detached.pop(t))
 
     @staticmethod
     def _values_to_select(body: str) -> str:
         """``VALUES (a, b), (c, d)`` → ``SELECT a, b UNION ALL SELECT c, d``
         with every value expression run through the CH-dialect rewriter (CH
         accepts function calls, not just literals, in VALUES)."""
-        from clickhouseocp_spark.chsql import (
-            ChSqlError,
-            _find_close,
-            _split_top,
-            render,
-            tokenize,
-            transpile_expr,
-        )
+        from clickhouseocp_spark.chsql import _find_close, _split_top, render, tokenize
 
         tokens = tokenize(body)
         if not tokens or tokens[0].upper() != "VALUES":
@@ -1167,6 +1253,23 @@ class ChSparkEngine:
             raise ChSqlError("VALUES: no rows")
         return " UNION ALL ".join(selects)
 
+    def _append(
+        self, t: str, target: DataFrame, incoming: DataFrame, names: list[str]
+    ) -> DataFrame:
+        """The one INSERT tail: append *incoming*'s columns *names* to table
+        *t*, whose lineage is *target*.  Absent columns become typed NULLs,
+        every value is cast to its column's type, and the union replaces
+        the lineage."""
+        incoming = incoming.select(
+            *(
+                (F.col(f.name) if f.name in names else F.lit(None))
+                .cast(f.dataType)
+                .alias(f.name)
+                for f in target.schema.fields
+            )
+        )
+        return self._set_lineage(t, target.unionByName(incoming))
+
     def _create_table(
         self, name: str, df: DataFrame, partition: tuple, order: tuple
     ) -> DataFrame:
@@ -1175,29 +1278,21 @@ class ChSparkEngine:
         session-scoped directory, read it back, register the view.  Reading
         the materialized layout means later queries get partition pruning
         and sorted row groups exactly as a MergeTree table would."""
-        import os
         import tempfile
 
         from clickhouseocp_spark.sources.writers import write_mergetree_style
 
-        base = getattr(self, "_table_dir", None)
-        if base is None:
-            base = self._table_dir = tempfile.mkdtemp(prefix="chspark_tables_")
-        path = os.path.join(base, name)
+        if self._table_dir is None:
+            self._table_dir = tempfile.mkdtemp(prefix="chspark_tables_")
+        path = os.path.join(self._table_dir, name)
         write_mergetree_style(df, path, partition_by=partition, order_by=order)
-        if not hasattr(self, "_table_partitions"):
-            self._table_partitions: dict[str, tuple] = {}
         self._table_partitions[name] = tuple(partition)
         return self._replace_view(name, self.spark.read.parquet(path))
 
     def _layout_path(self, name: str) -> str:
         """Materialized layout directory for *name*; raises when the table
         has no MergeTree layout (partition ops need real part directories)."""
-        import os
-
-        from clickhouseocp_spark.chsql import ChSqlError
-
-        base = getattr(self, "_table_dir", None)
+        base = self._table_dir
         path = os.path.join(base, name) if base else None
         if not path or not os.path.isdir(path):
             raise ChSqlError(
@@ -1209,8 +1304,6 @@ class ChSparkEngine:
     def _reread_layout(self, name: str) -> DataFrame:
         """Re-register *name* from its (possibly mutated) layout directory,
         busting Spark's file-listing cache first."""
-        import os
-
         path = self._layout_path(name)
         self.spark.catalog.refreshByPath(path)
         has_files = any(
@@ -1221,112 +1314,6 @@ class ChSparkEngine:
         if not has_files:
             return self._replace_view(name, self._table(name).limit(0))
         return self._replace_view(name, self.spark.read.parquet(path))
-
-    def _alter_partition(self, name: str, action: str, value: str) -> DataFrame:
-        """``ALTER TABLE t DROP|DETACH|ATTACH PARTITION v`` over the layout's
-        partition directories — the MergeTree partition-lifecycle surface
-        (detached parts live next to the layout, exactly CH's detached/)."""
-        import os
-        import shutil
-
-        from clickhouseocp_spark.chsql import ChSqlError
-
-        path = self._layout_path(name)
-        parts = getattr(self, "_table_partitions", {}).get(name) or ()
-        if not parts:
-            raise ChSqlError(
-                f"table {name!r} was not created with PARTITION BY — "
-                "no partitions to alter"
-            )
-        pdir = os.path.join(path, f"{parts[0]}={value}")
-        ddir = os.path.join(
-            os.path.dirname(path), f"detached_{name}", f"{parts[0]}={value}"
-        )
-        if action == "DROP":
-            if not os.path.isdir(pdir):
-                raise ChSqlError(f"no partition {value!r} in table {name!r}")
-            shutil.rmtree(pdir)
-        elif action == "DETACH":
-            if not os.path.isdir(pdir):
-                raise ChSqlError(f"no partition {value!r} in table {name!r}")
-            os.makedirs(os.path.dirname(ddir), exist_ok=True)
-            shutil.move(pdir, ddir)
-        elif action == "ATTACH":
-            if not os.path.isdir(ddir):
-                raise ChSqlError(
-                    f"no detached partition {value!r} for table {name!r}"
-                )
-            shutil.move(ddir, pdir)
-        return self._reread_layout(name)
-
-    def _freeze_table(self, name: str, backup: str) -> DataFrame:
-        """``ALTER TABLE t FREEZE [WITH NAME 'x']``: hard-link-free snapshot
-        of the layout into shadow/<backup>/<table> (CH freezes parts into
-        shadow/); returns the backup path."""
-        import os
-        import shutil
-
-        from pyspark.sql import functions as F
-
-        path = self._layout_path(name)
-        shadow = os.path.join(os.path.dirname(path), "shadow", backup, name)
-        if os.path.isdir(shadow):
-            shutil.rmtree(shadow)
-        shutil.copytree(path, shadow)
-        return self.spark.range(1).select(
-            F.lit(shadow).alias("backup_path"), F.lit(name).alias("table")
-        )
-
-    def _create_kafka_table(self, name: str, cols: str, tail: str) -> DataFrame:
-        """``CREATE TABLE q (...) ENGINE = Kafka SETTINGS kafka_broker_list =
-        '...', kafka_topic_list = '...'`` — the reference's streaming-ingest
-        engine (SURVEY §2.1; typically paired with a materialized view).
-
-        With the spark-sql-kafka connector present this builds the streaming
-        DataFrame (CH virtual columns + the declared schema parsed from the
-        JSONEachRow payload) and registers it under ``self.streams[name]``.
-        Without the jars it raises the ACTIONABLE enable recipe — the exact
-        package coordinate and session config — instead of an opaque
-        DATA_SOURCE_NOT_FOUND at first read."""
-        import re as _re
-
-        from clickhouseocp_spark.streaming.pipeline import (
-            kafka_available,
-            kafka_events_stream,
-        )
-
-        settings = dict(
-            _re.findall(r"(?i)(\w+)\s*=\s*'([^']*)'", tail)
-        )
-        brokers = settings.get("kafka_broker_list", "localhost:9092")
-        topic = settings.get("kafka_topic_list", name)
-        if not kafka_available(self.spark):
-            import pyspark
-
-            pkg = f"org.apache.spark:spark-sql-kafka-0-10_2.13:{pyspark.__version__}"
-            raise RuntimeError(
-                f"ENGINE = Kafka needs the Kafka connector on the classpath. "
-                f"Enable it with: spark-submit --packages {pkg}  (or "
-                f'SparkSession.builder.config("spark.jars.packages", "{pkg}")), '
-                f"then re-run this DDL; see README 'Optional format jars'."
-            )
-        stream = kafka_events_stream(self.spark, brokers, topic)
-        if cols.strip():
-            from clickhouseocp_spark.chsql import _map_type
-            from pyspark.sql import functions as F
-
-            fields = []
-            for part in cols.split(","):
-                bits = part.strip().split()
-                if len(bits) >= 2:
-                    fields.append(f"{bits[0]} {_map_type(bits[1])}")
-            stream = stream.select(
-                "*", F.from_json("value", ", ".join(fields)).alias("__row")
-            ).select("_topic", "_partition", "_offset", "_timestamp", "__row.*")
-        if not hasattr(self, "streams"):
-            self.streams: dict[str, DataFrame] = {}
-        self.streams[name] = stream
-        return stream
 
     def _table(self, name: str) -> DataFrame:
         if name not in self.tables:
@@ -1342,23 +1329,20 @@ class ChSparkEngine:
         """Unfiltered lineage of *name* — the view beneath any active row
         policies.  Mutations (INSERT/ALTER/DELETE/TRUNCATE) apply here: a
         row policy is a read-time filter, not a fork of the data."""
-        base = getattr(self, "_policy_base", {}).get(name)
+        base = self._policy_base.get(name)
         return base if base is not None else self._table(name)
 
     def _set_lineage(self, name: str, df: DataFrame) -> DataFrame:
         """Replace *name*'s lineage and re-derive the visible view through
         whatever row policies are currently active (stored as predicate
         strings, so mutations survive policy create/drop in any order)."""
-        from pyspark.sql import functions as F
-
         preds = [
             cond
-            for (t, cond) in getattr(self, "_row_policies", {}).values()
+            for (t, cond) in self._row_policies.values()
             if t == name
         ]
         if not preds:
-            if hasattr(self, "_policy_base"):
-                self._policy_base.pop(name, None)
+            self._policy_base.pop(name, None)
             return self._replace_view(name, df)
         self._policy_base[name] = df
         view = df
@@ -1372,47 +1356,10 @@ class ChSparkEngine:
 
         return all_queries()[name].fn(self.spark, self.sf_dir)
 
-    def _ensure_system_views(self) -> None:
-        """Register the system.* introspection surface as temp views so SQL
-        text can read it (chsql rewrites ``system.X`` → ``system_X``)."""
-        if getattr(self, "_system_views_done", False):
-            return
-        self.system_tables().createOrReplaceTempView("system_tables")
-        self.system_columns().createOrReplaceTempView("system_columns")
-        self.system_functions().createOrReplaceTempView("system_functions")
-        self.system_build_options().createOrReplaceTempView("system_build_options")
-        self.system_parts().createOrReplaceTempView("system_parts")
-        # system.one: the 1-row constant table CH uses for FROM-less probes
-        local_frame(
-            self.spark, [(0,)], "dummy tinyint"
-        ).createOrReplaceTempView("system_one")
-        self.system_settings().createOrReplaceTempView("system_settings")
-        # information_schema compat layer (CH ships it for BI tools):
-        # SQL-standard column names projected from the system views
-        self.spark.sql(
-            "SELECT 'default' AS table_catalog, 'default' AS table_schema, "
-            "name AS table_name, "
-            "CASE WHEN lower(type) LIKE '%view%' THEN 'VIEW' "
-            "ELSE 'BASE TABLE' END AS table_type FROM system_tables"
-        ).createOrReplaceTempView("information_schema_tables")
-        self.spark.sql(
-            "SELECT 'default' AS table_catalog, 'default' AS table_schema, "
-            "table AS table_name, name AS column_name, "
-            "position AS ordinal_position, type AS data_type "
-            "FROM system_columns"
-        ).createOrReplaceTempView("information_schema_columns")
-        local_frame(
-            self.spark,
-            [("default", "default")],
-            "catalog_name string, schema_name string",
-        ).createOrReplaceTempView("information_schema_schemata")
-        self._system_views_done = True
-
     def system_settings(self) -> DataFrame:
         """`system.settings` analog: the session settings applied via SET
         (changed = 1, CH's changed-flag semantics) plus the engine's pinned
-        Spark-conf analogs (changed = 0).  Re-registered after every SET so
-        text queries always see the current state."""
+        Spark-conf analogs (changed = 0)."""
         def conf(key: str) -> str:
             try:  # typed confs reject a ''-default (Spark 4 validates it)
                 return str(self.spark.conf.get(key))
@@ -1425,7 +1372,7 @@ class ChSparkEngine:
             ("ansi_mode", conf("spark.sql.ansi.enabled")),
             ("adaptive_execution", conf("spark.sql.adaptive.enabled")),
         ]
-        changed = getattr(self, "settings", {})
+        changed = self.settings
         rows = [(k, str(v), 1) for k, v in sorted(changed.items())] + [
             (k, str(v), 0) for k, v in pinned if k not in changed
         ]
@@ -1464,18 +1411,14 @@ class ChSparkEngine:
     def _spark_type(self, ch: str) -> str:
         """CH column type name → Spark SQL type (inverse of _CH_TYPE_NAMES,
         for bare CREATE TABLE DDL)."""
-        import re as _re
-
-        from clickhouseocp_spark.chsql import ChSqlError
-
         t = ch.strip()
-        m = _re.match(r"(?is)^(?:Nullable|LowCardinality)\((.+)\)$", t)
+        m = re.match(r"(?is)^(?:Nullable|LowCardinality)\((.+)\)$", t)
         if m:
             return self._spark_type(m.group(1))
-        m = _re.match(r"(?is)^Array\((.+)\)$", t)
+        m = re.match(r"(?is)^Array\((.+)\)$", t)
         if m:
             return f"array<{self._spark_type(m.group(1))}>"
-        m = _re.match(r"(?is)^Decimal\((\d+)\s*,\s*(\d+)\)$", t)
+        m = re.match(r"(?is)^Decimal\((\d+)\s*,\s*(\d+)\)$", t)
         if m:
             return f"decimal({m.group(1)},{m.group(2)})"
         base = t.split("(")[0].strip().lower()
@@ -1501,40 +1444,6 @@ class ChSparkEngine:
         "timestamp_ntz": "DateTime64(6)", "boolean": "Bool", "binary": "String",
     }
 
-    def show_create_table(self, name: str) -> DataFrame:
-        """``SHOW CREATE TABLE t``: synthesize CH-style DDL from the live
-        schema + the table's physical layout (partition dirs of a CTAS
-        MergeTree materialization when present)."""
-        import os
-
-        df = self._table(name)
-
-        def ch_type(t: str) -> str:
-            if t.startswith("decimal"):
-                return "Decimal" + t[len("decimal"):]
-            if t.startswith("array<") and t.endswith(">"):
-                return f"Array({ch_type(t[6:-1])})"
-            return self._CH_TYPE_NAMES.get(t, t)
-
-        cols = ",\n    ".join(f"`{c}` {ch_type(t)}" for c, t in df.dtypes)
-        partition = ""
-        base = getattr(self, "_table_dir", None)
-        if base is not None:
-            root = os.path.join(base, name)
-            if os.path.isdir(root):
-                keys = {
-                    d.split("=")[0]
-                    for d in os.listdir(root)
-                    if "=" in d and os.path.isdir(os.path.join(root, d))
-                }
-                if keys:
-                    partition = f"\nPARTITION BY ({', '.join(sorted(keys))})"
-        ddl = (
-            f"CREATE TABLE {name}\n(\n    {cols}\n)\n"
-            f"ENGINE = MergeTree{partition}\nORDER BY tuple()"
-        )
-        return local_frame(self.spark, [(ddl,)], "statement string")
-
     def system_parts(self) -> DataFrame:
         """``system.parts`` analog over CTAS-materialized MergeTree-layout
         tables: one row per parquet data file with its partition value, row
@@ -1542,8 +1451,6 @@ class ChSparkEngine:
         data is scanned; cost is bounded by file count, exactly like CH's
         parts metadata.  Fixture tables (plain parquet, no layout dirs)
         report partition='' like CH's unpartitioned 'all' parts."""
-        import os
-
         import pyarrow.parquet as pq
 
         rows = []
@@ -1569,7 +1476,7 @@ class ChSparkEngine:
                         )
                     )
 
-        base = getattr(self, "_table_dir", None)
+        base = self._table_dir
         materialized: set[str] = set()
         if base is not None and os.path.isdir(base):
             for table in sorted(os.listdir(base)):
@@ -1629,6 +1536,52 @@ class ChSparkEngine:
         rows = [(n, n.lower() in native) for n in names]
         return local_frame(self.spark, rows, "name string, spark_builtin boolean")
 
+    #: the system views SQL text can read (chsql rewrites ``system.X`` to
+    #: ``system_X``), each built fresh by the statement that names it
+    _SYSTEM_VIEWS = {
+        "system_tables": system_tables,
+        "system_columns": system_columns,
+        "system_functions": system_functions,
+        "system_build_options": system_build_options,
+        "system_parts": system_parts,
+        "system_settings": system_settings,
+        "system_query_log": system_query_log,
+        "system_metrics": system_metrics,
+        # system.one: the 1-row constant table CH uses for FROM-less probes
+        "system_one": lambda self: local_frame(
+            self.spark, [(0,)], "dummy tinyint"
+        ),
+        # information_schema compat layer (CH ships it for BI tools):
+        # SQL-standard column names projected from the system views
+        "information_schema_tables": lambda self: self.system_tables().selectExpr(
+            "'default' AS table_catalog",
+            "'default' AS table_schema",
+            "name AS table_name",
+            "CASE WHEN lower(type) LIKE '%view%' THEN 'VIEW' "
+            "ELSE 'BASE TABLE' END AS table_type",
+        ),
+        "information_schema_columns": lambda self: self.system_columns().selectExpr(
+            "'default' AS table_catalog",
+            "'default' AS table_schema",
+            "table AS table_name",
+            "name AS column_name",
+            "position AS ordinal_position",
+            "type AS data_type",
+        ),
+        "information_schema_schemata": lambda self: local_frame(
+            self.spark,
+            [("default", "default")],
+            "catalog_name string, schema_name string",
+        ),
+    }
+
+    def _register_system_views(self, query: str) -> None:
+        """Build and register each system view *query* names, so it shows
+        the catalog, schemas, settings and log as of this statement."""
+        named = {f"{p}_{n}".lower() for p, n in _SYSTEM_REF_RE.findall(query)}
+        for view in named & self._SYSTEM_VIEWS.keys():
+            self._SYSTEM_VIEWS[view](self).createOrReplaceTempView(view)
+
     def explain(self, name_or_sql: str, dialect: str = "auto", mode: str = "PIPELINE") -> str:
         """EXPLAIN statement family (CH ships EXPLAIN AST / SYNTAX / PLAN /
         PIPELINE / ESTIMATE):
@@ -1672,11 +1625,7 @@ class ChSparkEngine:
         CH reads MergeTree part headers; the analog is parquet footer
         metadata via :meth:`system_parts`, filtered to tables referenced in
         the statement text."""
-        import re as _re
-
-        from pyspark.sql import functions as F
-
-        words = {w.lower() for w in _re.findall(r"[A-Za-z_][A-Za-z0-9_]*", sql_text)}
+        words = {w.lower() for w in re.findall(r"[A-Za-z_][A-Za-z0-9_]*", sql_text)}
         parts = self.system_parts()
         referenced = [t for t in self.tables if t in words]
         est = (
@@ -1707,11 +1656,8 @@ class ChSparkEngine:
         sinks, not a terminal format.  ``stats`` (optional out-param)
         receives ``result_rows`` / ``written_rows`` for the HTTP summary
         headers."""
-        import re as _re
-
         from clickhouseocp_spark.formats import render
 
-        head = query.lstrip().split(None, 1)[0].upper() if query.strip() else ""
         m = detect_trailing_format(query)
         fmt = m or default_format or "TabSeparated"
         # SELECT ... INTO OUTFILE 'path' [FORMAT x]: clickhouse-local writes
@@ -1719,10 +1665,8 @@ class ChSparkEngine:
         # extension when no FORMAT is given) and reports the row count on
         # stdout.  Driver-side by design — bulk exports go through
         # sources/writers.py; this is the interactive-tool surface.
-        mo = _re.search(
-            r"\bINTO\s+OUTFILE\s+'([^']+)'", query, _re.IGNORECASE
-        )
-        if mo and head not in ("INSERT",):
+        mo = re.search(r"\bINTO\s+OUTFILE\s+'([^']+)'", query, re.IGNORECASE)
+        if mo and statement_head(query) != "INSERT":
             path = mo.group(1)
             query = query[: mo.start()] + query[mo.end():]
             if not m:
@@ -1738,7 +1682,6 @@ class ChSparkEngine:
             binfmt = {"parquet": "parquet", "orc": "orc", "arrow": "parquet"}
             if fmt.lower() in binfmt:
                 from pyspark.sql import Observation
-                from pyspark.sql import functions as F
 
                 obs = Observation()
                 df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
@@ -1768,12 +1711,8 @@ class ChSparkEngine:
         Absent columns default to NULL; rows append by union.  ``stats``
         (optional out-param) receives ``written_rows`` for the HTTP summary
         headers."""
-        import re as _re
-
-        from pyspark.sql import functions as F
         from pyspark.sql.types import StructType
 
-        from clickhouseocp_spark.chsql import ChSqlError
         from clickhouseocp_spark.formats import (
             BINARY,
             _rb_spark_to_ch,
@@ -1781,7 +1720,7 @@ class ChSparkEngine:
             parse_rowbinary,
         )
 
-        m = _re.match(
+        m = re.match(
             r"(?is)^INSERT\s+INTO\s+(\w+)\s*(?:\(([\w\s,]+)\)\s*)?"
             r"FORMAT\s+(\w+)\s*$",
             statement.strip(),
@@ -1798,10 +1737,8 @@ class ChSparkEngine:
         parse = BINARY[fmt][1]
         if parse is not None:
             names, rows = parse(data)
-        elif m.group(2):
-            names = [c.strip() for c in m.group(2).split(",")]
         else:
-            names = list(target.columns)
+            names = _column_list(m.group(2)) or list(target.columns)
         unknown = [c for c in names if c not in fields]
         if unknown:
             raise ChSqlError(f"{fmt} column names {unknown} not in table {t!r}")
@@ -1820,19 +1757,13 @@ class ChSparkEngine:
         incoming = self.spark.createDataFrame(
             rows, StructType([fields[c] for c in names])
         )
-        incoming = incoming.select(
-            *(
-                c if c in names else F.lit(None).cast(fields[c].dataType).alias(c)
-                for c in target.columns
-            )
-        )
-        return self._set_lineage(t, target.unionByName(incoming))
+        return self._append(t, target, incoming, names)
 
     def refresh_views(self) -> list[str]:
         """Recompute every refreshable materialized view (the scheduler-less
         analog of CH's background refresh loop; call it from any external
         scheduler at the recorded cadence)."""
-        names = list(getattr(self, "_refreshable_views", {}))
+        names = list(self._refreshable_views)
         for name in names:
             self.execute(f"SYSTEM REFRESH VIEW {name}")
         return names

@@ -28,8 +28,10 @@ with nothing beyond the stdlib http.server:
   inflated; responses are gzipped when the client sends
   ``Accept-Encoding: gzip`` AND ``enable_http_compression=1`` (param or
   session setting) — CH's exact opt-in rule
-- ``readonly=1`` (param or session setting, sticky) refuses every
-  mutation, binary ingest included, with code 164
+- ``readonly=1`` (param or session setting, sticky) refuses, with code
+  164, every statement the engine's statement table marks as writing (DDL,
+  mutations, BACKUP/RESTORE, SYSTEM REFRESH VIEW; binary ingest included)
+  — reads, SET, CHECK TABLE, SYSTEM FLUSH LOGS and KILL stay allowed
 - errors → 500 with the real ClickHouse exception code for the common
   classes (60 UNKNOWN_TABLE, 62 SYNTAX_ERROR, 46 UNKNOWN_FUNCTION,
   47 UNKNOWN_IDENTIFIER, 36 BAD_ARGUMENTS; 1000 otherwise) in
@@ -69,7 +71,12 @@ import uuid
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
-from clickhouseocp_spark.engine import detect_trailing_format
+from clickhouseocp_spark.engine import (
+    detect_trailing_format,
+    parse_set,
+    statement_head,
+    statement_writes,
+)
 from clickhouseocp_spark.formats import BINARY, canonical, content_type
 
 #: common ClickHouse exception codes (from the public ErrorCodes list) that
@@ -80,13 +87,6 @@ _CODE_UNKNOWN_TABLE = 60
 _CODE_SYNTAX_ERROR = 62
 _CODE_BAD_ARGUMENTS = 36
 _CODE_READONLY = 164
-
-#: statement heads rejected under readonly=1 (CH's readonly=1 contract:
-#: reads and session SETs allowed, mutations/DDL refused with code 164)
-_WRITE_HEADS = (
-    "INSERT", "CREATE", "DROP", "ALTER", "TRUNCATE", "RENAME", "EXCHANGE",
-    "OPTIMIZE", "DELETE", "ATTACH", "DETACH", "UNDROP",
-)
 
 
 def exception_code(e: Exception) -> int:
@@ -113,8 +113,6 @@ def exception_code(e: Exception) -> int:
         return _CODE_BAD_ARGUMENTS
     return 1000
 
-
-_SET_RE = re.compile(r"(?is)^\s*SET\s+(\w+)\s*=\s*('[^']*'|\S+?)\s*;?\s*$")
 
 #: an INSERT whose trailing FORMAT names its input data; with a body and a
 #: name in ``formats.BINARY`` the request is a binary ingest
@@ -344,9 +342,7 @@ class ChHttpServer:
                 if not query.strip():
                     self._reply(400, b"no query\n", hdrs)
                     return
-                if readonly and query.lstrip().split(None, 1)[0].upper() in (
-                    _WRITE_HEADS
-                ):
+                if readonly and statement_writes(query):
                     self._reply(
                         500,
                         *_error(
@@ -356,10 +352,9 @@ class ChHttpServer:
                         ),
                     )
                     return
-                mset = _SET_RE.match(query)
+                mset = parse_set(query)
                 if mset:
-                    name = mset.group(1).lower()
-                    value = mset.group(2).strip().strip("'")
+                    name, value = mset
                     if readonly and name == "readonly" and value != "1":
                         # readonly can never be decreased once set
                         self._reply(
@@ -417,7 +412,7 @@ class ChHttpServer:
                 if (
                     progress
                     and not want_gzip
-                    and not query.lstrip().upper().startswith("INSERT")
+                    and statement_head(query) != "INSERT"
                 ):
                     # CH's incremental progress wire shape: repeated
                     # X-ClickHouse-Progress header FIELDS streamed while the

@@ -604,8 +604,9 @@ def test_insert_format_csv_tsv(spark, sf_dir):
     eng.sql("CREATE TABLE fmt_t (a Int64, b String, c Float64) ENGINE = Memory")
     eng.sql("INSERT INTO fmt_t FORMAT CSV 1,x,1.5\n2,y,2.5")
     eng.sql("INSERT INTO fmt_t (a, b) FORMAT TabSeparated 3\tz")
+    eng.sql("INSERT INTO fmt_t (c, a) FORMAT TSV 4.5\t4")
     rows = {r.a: (r.b, r.c) for r in eng.sql("SELECT * FROM fmt_t", dialect="spark").collect()}
-    assert rows == {1: ("x", 1.5), 2: ("y", 2.5), 3: ("z", None)}
+    assert rows == {1: ("x", 1.5), 2: ("y", 2.5), 3: ("z", None), 4: (None, 4.5)}
 
 
 def test_create_table_bare_ddl_types(spark, sf_dir):
@@ -1193,8 +1194,11 @@ def test_alter_add_fulltext_index(spark, sf_dir):
         ).collect()[0].n
         assert idx_n == scan_n > 0
         eng.sql("ALTER TABLE documents MATERIALIZE INDEX ft")
-        eng.sql("ALTER TABLE documents DROP INDEX ft")
-        assert "documents__idx_ft" not in eng.tables
+        for drop in ("DROP INDEX", "CLEAR INDEX"):
+            eng.sql("ALTER TABLE documents ADD INDEX ft (text) TYPE full_text")
+            eng.sql(f"ALTER TABLE documents {drop} ft")
+            assert "documents__idx_ft" not in eng.tables, drop
+            assert not spark.catalog.tableExists("documents__idx_ft"), drop
     finally:
         eng.tables.pop("documents__idx_ft", None)
 
@@ -1388,3 +1392,126 @@ def test_clear_column_type_defaults(spark, sf_dir):
     assert all(r.ts is not None and r.ts.year == 1970 for r in rows)
     assert all(r.arr == [] for r in rows)
     assert all(r.event_type == "" for r in rows)
+
+
+def test_system_views_are_built_fresh(spark, sf_dir):
+    """A statement that names a system view gets it built as of that
+    statement: a CTAS and an ADD COLUMN made after an earlier system read
+    show up in system.tables/columns/parts and information_schema.tables."""
+    eng = ChSparkEngine(sf_dir, spark=spark)
+
+    def one(sql: str):
+        return eng.sql(sql, dialect="clickhouse").collect()[0].n
+
+    assert one("SELECT count() AS n FROM system.tables WHERE name = 'fresh_t'") == 0
+    n_cols = len(eng.tables["region"].columns)
+    n_rows = eng.tables["region"].count()
+    try:
+        eng.sql("CREATE TABLE fresh_t ENGINE = MergeTree AS SELECT * FROM region")
+        assert one("SELECT count() AS n FROM system.tables WHERE name = 'fresh_t'") == 1
+        assert one(
+            "SELECT count() AS n FROM system.columns WHERE table = 'fresh_t'"
+        ) == n_cols
+        assert one(
+            "SELECT sum(rows) AS n FROM system.parts WHERE table = 'fresh_t'"
+        ) == n_rows
+        assert one(
+            "SELECT count() AS n FROM information_schema.tables "
+            "WHERE table_name = 'fresh_t'"
+        ) == 1
+        eng.sql("ALTER TABLE region ADD COLUMN pop Int64")
+        assert one(
+            "SELECT count() AS n FROM system.columns WHERE table = 'region'"
+        ) == n_cols + 1
+    finally:
+        # engines on one session share the fixture views: put region back
+        eng.sql("ALTER TABLE region DROP COLUMN IF EXISTS pop")
+        eng.sql("DROP TABLE IF EXISTS fresh_t")
+
+
+def test_drop_unknown_table_raises(spark, sf_dir):
+    """DROP TABLE of a name that does not exist raises the unknown-table
+    error (CH code 60 over HTTP), as TRUNCATE does; IF EXISTS makes it a
+    no-op."""
+    import pytest
+
+    from clickhouseocp_spark.server import exception_code
+
+    eng = ChSparkEngine(sf_dir, spark=spark)
+    for stmt in ("DROP TABLE no_such_table", "TRUNCATE TABLE no_such_table"):
+        with pytest.raises(KeyError, match="unknown table") as exc:
+            eng.sql(stmt)
+        assert exception_code(exc.value) == 60, stmt
+    assert eng.sql("DROP TABLE IF EXISTS no_such_table").columns == ["dropped"]
+
+
+def test_drop_view_removes_parameterized_view(spark, sf_dir):
+    """DROP VIEW of a parameterized view removes it: a later call of the
+    view fails instead of answering from the dropped definition."""
+    eng = ChSparkEngine(sf_dir, spark=spark)
+    eng.sql(
+        "CREATE VIEW nations_in AS "
+        "SELECT n_nationkey FROM nation WHERE n_regionkey = {r:UInt8}"
+    )
+    query = "SELECT count() AS n FROM nations_in(r = 1)"
+    assert eng.sql(query, dialect="clickhouse").collect()[0].n == 5
+    eng.sql("DROP VIEW nations_in")
+    import pytest
+
+    with pytest.raises(Exception, match="(?i)nations_in"):
+        eng.sql(query, dialect="clickhouse").collect()
+
+
+def test_statement_table_routing(spark, sf_dir):
+    """One table routes every DDL/DML/ops statement: overlapping forms keep
+    their precedence, a misspelled form raises ``unsupported statement``,
+    and the write flag is what readonly=1 refuses."""
+    import pytest
+
+    from clickhouseocp_spark.chsql import ChSqlError
+    from clickhouseocp_spark.engine import match_statement, statement_writes
+
+    def handler(stmt: str) -> str:
+        return match_statement(stmt)[0].handler.__name__
+
+    assert handler(
+        "CREATE MATERIALIZED VIEW mv REFRESH EVERY 1 HOUR AS SELECT 1"
+    ) == "_create_refreshable_view"
+    assert handler("CREATE MATERIALIZED VIEW mv AS SELECT 1") == "_create_view"
+    assert handler(
+        "CREATE TABLE k (a String) ENGINE = Kafka SETTINGS kafka_topic_list = 't'"
+    ) == "_create_kafka_table"
+    assert handler("CREATE TABLE k (a String) ENGINE = Memory") == "_create_empty_table"
+    assert handler("CREATE TABLE k ENGINE = MergeTree AS SELECT 1") == "_create_table_as"
+    assert handler("SYSTEM REFRESH VIEW mv") == "_refresh_view"
+    assert handler("SYSTEM FLUSH LOGS") == "_acknowledge"
+    assert handler("DROP ROW POLICY p ON t") == "_drop_row_policy"
+    assert handler("DROP VIEW v") == "_drop_table"
+    assert handler("INSERT INTO t FORMAT CSV 1,2") == "_insert_text"
+    assert handler("INSERT INTO t SELECT 1") == "_insert_select"
+    assert match_statement("ALTER TABLE Region DROP COLUMN x")[1]["t"] == "region"
+    assert match_statement("SELECT 1") is None
+
+    eng = ChSparkEngine(sf_dir, spark=spark)
+    with pytest.raises(ChSqlError, match="unsupported statement"):
+        eng.sql("ALTER TABLE region FROB COLUMN r_name")
+    with pytest.raises(ChSqlError, match="cannot parse SET statement"):
+        eng.sql("SET max_threads")
+    for stmt in ("RESTORE TABLE t FROM File('x')", "BACKUP TABLE t TO 'x'",
+                 "SYSTEM REFRESH VIEW mv", "ALTER TABLE t FROB COLUMN x"):
+        assert statement_writes(stmt), stmt
+    for stmt in ("SELECT 1", "SET a = 1", "CHECK TABLE t", "SYSTEM FLUSH LOGS",
+                 "KILL QUERY WHERE query_id = 'q'", "SHOW TABLES"):
+        assert not statement_writes(stmt), stmt
+
+
+def test_columns_matcher_without_match_is_a_chsql_error(spark, sf_dir):
+    """COLUMNS('re') matching no column raises ChSqlError (CH code 62 over
+    HTTP), not a NameError from the engine."""
+    import pytest
+
+    from clickhouseocp_spark.chsql import ChSqlError
+
+    eng = ChSparkEngine(sf_dir, spark=spark)
+    with pytest.raises(ChSqlError, match="matched no columns"):
+        eng.sql("SELECT COLUMNS('^zz') FROM region", dialect="clickhouse")

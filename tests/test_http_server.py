@@ -402,22 +402,42 @@ def test_replicas_status(http_engine):
     assert (status, body) == (200, "Ok.\n")
 
 
-def test_readonly_mode(http_engine):
-    """readonly=1 (param or session setting) rejects mutations/DDL with
-    CH's code 164 while reads keep working."""
-    q = urllib.parse.quote("INSERT INTO region FORMAT CSV")
-    req = urllib.request.Request(
-        f"http://127.0.0.1:{http_engine.port}/?query={q}&readonly=1",
-        data=b"99,X", method="POST",
-    )
-    with pytest.raises(urllib.error.HTTPError) as exc:
-        urllib.request.urlopen(req)
-    assert exc.value.code == 500
-    assert exc.value.headers["X-ClickHouse-Exception-Code"] == "164"
-    # reads still fine under readonly
-    rq = urllib.parse.quote("SELECT count() AS n FROM nation")
-    status, body, _ = _get(http_engine, f"/?query={rq}&readonly=1")
-    assert status == 200 and body.strip() == "25"
+def test_readonly_mode(http_engine, tmp_path):
+    """readonly=1 (param or session setting) rejects every statement that
+    writes — mutations/DDL, BACKUP, RESTORE, SYSTEM REFRESH VIEW — with CH's
+    code 164, while reads, CHECK TABLE, SYSTEM FLUSH LOGS and KILL keep
+    working."""
+    region_backup = tmp_path / "region_backup"
+    http_engine.engine.execute(f"BACKUP TABLE region TO File('{region_backup}')")
+    new_backup = tmp_path / "nation_backup"
+    for stmt, body in (
+        ("INSERT INTO region FORMAT CSV", b"99,X"),
+        (f"RESTORE TABLE nation FROM File('{region_backup}')", b""),
+        (f"BACKUP TABLE nation TO File('{new_backup}')", b""),
+        ("SYSTEM REFRESH VIEW nation", b""),
+    ):
+        q = urllib.parse.quote(stmt)
+        req = urllib.request.Request(
+            f"http://127.0.0.1:{http_engine.port}/?query={q}&readonly=1",
+            data=body, method="POST",
+        )
+        with pytest.raises(urllib.error.HTTPError) as exc:
+            urllib.request.urlopen(req)
+        assert exc.value.code == 500, stmt
+        assert exc.value.headers["X-ClickHouse-Exception-Code"] == "164", stmt
+    assert not new_backup.exists()
+    # reads and the non-writing ops statements still fine under readonly;
+    # the refused RESTORE left nation as it was
+    for stmt, expect in (
+        ("SELECT count() AS n FROM nation", "25"),
+        ("CHECK TABLE region", None),
+        ("SYSTEM FLUSH LOGS", None),
+        ("KILL QUERY WHERE query_id = 'none'", None),
+    ):
+        rq = urllib.parse.quote(stmt)
+        status, body, _ = _get(http_engine, f"/?query={rq}&readonly=1")
+        assert status == 200, stmt
+        assert expect is None or body.strip() == expect, stmt
 
 
 def test_readonly_blocks_binary_ingest(http_engine, spark):
